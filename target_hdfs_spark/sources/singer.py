@@ -13,9 +13,12 @@ This is the reference's entire runtime re-expressed (SURVEY.md §3.1):
 Two ingest paths share every transform and the writer:
 
 - `SingerPipe.process_lines` — protocol-faithful stdin loop. The
-  driver-side record buffer is bounded by max_batch_size; each flush
-  becomes one small Spark job. This path exists for wire parity, not
-  throughput.
+  driver-side record buffer (coerced row tuples) is bounded by
+  max_batch_size. A flush transposes it into one Arrow table and
+  hands that to `createDataFrame` — a columnar transfer with no
+  per-row pickling, as the reference buffers PyArrow tables — then
+  writes it from a single partition: a flush holds at most
+  max_batch_size rows, the file row limit, so it lands as one file.
 - `ingest_jsonl_dir` — the 100 TB path: records already staged as
   JSONL files are read with `spark.read.json(schema=...)` so parsing,
   validation and writing all run distributed; the driver never sees a
@@ -26,13 +29,16 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import re
 import sys
 from collections.abc import Iterable, Iterator
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from target_hdfs_spark.config import TargetConfig
 from target_hdfs_spark.plans.writer import write_stream
@@ -49,6 +55,14 @@ class RecordValidationError(ValueError):
     """A RECORD does not conform to its stream's declared schema."""
 
 
+_INT64_MIN, _INT64_MAX = -(2**63), 2**63 - 1
+_LONE_SURROGATE = re.compile("[\ud800-\udfff]")
+
+_DLQ_SCHEMA = T.StructType(
+    [T.StructField(name, T.StringType()) for name in ("stream", "record", "error")]
+)
+
+
 @dataclass
 class _StreamBuffer:
     schema: T.StructType
@@ -62,14 +76,23 @@ def _coerce(value, dtype: T.DataType, path: str):
     """Coerce a JSON value to its Spark type (timestamps/dates arrive
     as ISO-8601 strings on the Singer wire). Raises
     RecordValidationError on type mismatches — the engine's analog of
-    the SDK's JSON Schema record validation (R5)."""
+    the SDK's JSON Schema record validation (R5).
+
+    Timestamps come out aware and in UTC: Arrow drops a datetime's
+    offset when building a UTC column, so the offset is applied here.
+    A naive timestamp is read in UTC, the session zone — never in the
+    host's local zone. Integers must fit int64, so an out-of-range
+    value is an invalid record (skip/dlq apply) rather than a flush
+    failure."""
     if value is None:
         return None
     try:
         if isinstance(dtype, T.TimestampType):
-            if isinstance(value, dt.datetime):
-                return value
-            return dt.datetime.fromisoformat(str(value).replace("Z", "+00:00"))
+            if not isinstance(value, dt.datetime):
+                value = dt.datetime.fromisoformat(str(value).replace("Z", "+00:00"))
+            if value.tzinfo is None:
+                return value.replace(tzinfo=dt.timezone.utc)
+            return value.astimezone(dt.timezone.utc)
         if isinstance(dtype, T.DateType):
             if isinstance(value, dt.date) and not isinstance(value, dt.datetime):
                 return value
@@ -80,6 +103,8 @@ def _coerce(value, dtype: T.DataType, path: str):
             if isinstance(value, float) and not value.is_integer():
                 # silent truncation would corrupt data; 2.0 is fine, 1.9 is not
                 raise ValueError(f"non-integral value for integer field: {value!r}")
+            if not _INT64_MIN <= value <= _INT64_MAX:
+                raise ValueError(f"integer out of int64 range: {value!r}")
             return int(value)
         if isinstance(dtype, T.DoubleType):
             if isinstance(value, bool) or not isinstance(value, (int, float)):
@@ -92,7 +117,10 @@ def _coerce(value, dtype: T.DataType, path: str):
         if isinstance(dtype, T.StringType):
             if isinstance(value, (dict, list)):
                 return json.dumps(value, separators=(",", ":"))
-            return str(value)
+            value = str(value)
+            # a JSON escape can carry a lone surrogate, which UTF-8 (and
+            # so Arrow) cannot encode: store U+FFFD, as the JVM decodes it
+            return value if value.isascii() else _LONE_SURROGATE.sub("\ufffd", value)
         if isinstance(dtype, T.StructType):
             if not isinstance(value, dict):
                 raise ValueError(f"not an object: {value!r}")
@@ -105,8 +133,25 @@ def _coerce(value, dtype: T.DataType, path: str):
         return value
     except RecordValidationError:
         raise
-    except (ValueError, TypeError) as e:
+    except (ValueError, TypeError, OverflowError) as e:
         raise RecordValidationError(f"field {path}: {e}") from e
+
+
+def _arrow_frame(
+    spark: SparkSession, rows: list[tuple], schema: T.StructType
+) -> DataFrame:
+    """Buffered row tuples -> a one-partition DataFrame, transferred as
+    one Arrow table (columns transposed here, at flush time). A
+    zero-field schema has no column to carry the row count through
+    Arrow, so its rows come from `range` instead."""
+    if not schema.fields:
+        return spark.range(len(rows), numPartitions=1).select()
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(zip(*rows), arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema=schema).coalesce(1)
 
 
 class SingerPipe:
@@ -357,10 +402,8 @@ class SingerPipe:
                         "discovery for readers"
                     )
             self._dlq_layout_checked = True
-        df = self.spark.createDataFrame(
-            self._dlq, schema="stream string, record string, error string"
-        )
-        df.coalesce(1).write.partitionBy("stream").mode("append").parquet(base)
+        df = _arrow_frame(self.spark, self._dlq, _DLQ_SCHEMA)
+        df.write.partitionBy("stream").mode("append").parquet(base)
         self._dlq.clear()
 
     def _flush(self, name: str) -> None:
@@ -372,8 +415,7 @@ class SingerPipe:
             buf.files_flushed += 1
             buf.records.clear()
             return
-        df = self.spark.createDataFrame(buf.records, schema=buf.schema)
-        df = self._shape(name, df, buf)
+        df = self._shape(name, _arrow_frame(self.spark, buf.records, buf.schema), buf)
         write_stream(
             self.spark,
             df,
