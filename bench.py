@@ -19,10 +19,9 @@ Methodology (stabilized for cross-machine comparability):
   of silently polluting the headline;
 - NOISE VALIDITY GATE: a loaded benchmark box shows up as uniformly
   inflated spreads (the round-4 incident: every query 1.2-1.6x slower
-  with 2-6x the usual spread, code unchanged). MIN_PASSES timed
-  passes always run with every sample pooled into the per-query best
-  (any passes beyond that, up to MAX_PASSES, would be
-  CONVERGENCE-driven). The `validity` object records passes taken, the per-pass
+  with 2-6x the usual spread, code unchanged). All PASSES timed
+  passes run with every sample pooled into the per-query best. The
+  `validity` object records passes taken, the per-pass
   median relative spread, and the best-total trajectory, and flags
   `noisy: true` when the final pass still showed high spread — so a
   number produced under residual noise is visibly marked instead of
@@ -123,16 +122,13 @@ def auto_headliners(specs) -> list[str]:
 
 
 # Validity gate: high per-pass median relative spread marks box noise
-# (the r4 incident fingerprint); extra passes run while the pooled
-# best-total is still improving by more than CONVERGE_TOL.
+# (the r4 incident fingerprint).
 NOISE_REL_SPREAD = 0.30
-CONVERGE_TOL = 0.03
 # r7 verdict item 5: the convergence early-exit stopped r7 at 3 passes
 # and made three per-query upticks unresolvable against r6's 4-pass
-# pool — passes are now FIXED at 4 so round-over-round deltas always
+# pool — passes are FIXED at 4 so round-over-round deltas always
 # compare equal-sized best-of pools.
-MIN_PASSES = 4
-MAX_PASSES = 4
+PASSES = 4
 RUNS_PER_PASS = 3
 
 
@@ -202,20 +198,12 @@ def main() -> None:
     samples = timed_pass(names, specs, spark, sf_dir)
     spread_trajectory = [round(_median_rel_spread(samples), 4)]
     best_total_trajectory = [round(sum(min(r) for r in samples.values()), 4)]
-    passes = 1
-    while passes < MAX_PASSES:
-        # always take MIN_PASSES passes; beyond that, continue only
-        # while pooling is still moving the best-total (not converged)
-        if passes >= MIN_PASSES:
-            prev, cur = best_total_trajectory[-2:]
-            if prev - cur <= CONVERGE_TOL * prev:
-                break
+    for _ in range(PASSES - 1):
         extra = timed_pass(names, specs, spark, sf_dir)
         # pool: best-of-all-samples converges toward the true
         # steady-state even when individual passes are polluted
         for name in names:
             samples[name].extend(extra[name])
-        passes += 1
         spread_trajectory.append(round(_median_rel_spread(extra), 4))
         best_total_trajectory.append(
             round(sum(min(r) for r in samples.values()), 4)
@@ -285,8 +273,8 @@ def main() -> None:
     # per-query bests; the FULL record — medians, spreads, validity
     # trajectories — goes to the committed BENCH_LOCAL.json artifact.
     validity = {
-        "passes": passes,
-        "runs_per_query": passes * RUNS_PER_PASS,
+        "passes": PASSES,
+        "runs_per_query": PASSES * RUNS_PER_PASS,
         "median_rel_spread_by_pass": spread_trajectory,
         "best_total_by_pass": best_total_trajectory,
         "noisy": spread_trajectory[-1] > NOISE_REL_SPREAD,

@@ -4538,14 +4538,9 @@ def coorder_part_edges(li: DataFrame) -> DataFrame:
     # merge the whole census into one task at bench scale (measured
     # r12: 3.3 s one-task vs 1.0 s spread). repartition-by-key is
     # reused by the groupBy (same keys, same count — one exchange).
-    # Count is scale-adaptive: floor at every core, grow with the
-    # materialized basket frame (whose partitioning AQE already sized
-    # by bytes), so at 100 TB the census keeps data-proportional
-    # tasks instead of a per-core pin.
-    n_fan = max(
-        li.sparkSession.sparkContext.defaultParallelism,
-        baskets.rdd.getNumPartitions(),
-    )
+    # The basket frame was fanned to every core above, so the census
+    # uses the same count.
+    n_fan = li.sparkSession.sparkContext.defaultParallelism
     pairs = (
         baskets.select(
             F.explode(

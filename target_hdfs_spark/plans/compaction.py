@@ -8,12 +8,18 @@ target_hdfs/sinks.py:31-44, target_hdfs/utils/hdfs.py:91-117). Spark
 cannot append rows to an existing Parquet file, so the engine
 (a) prevents small files at write time (plans/writer.py sizing) and
 (b) repairs them with this job: gather all undersized files in a
-stream directory, rewrite them as consolidated files into a temp dir,
-then commit by moving the new files in and deleting the old ones —
-the same write-new-then-swap commit the reference performs per file
-(reference: target_hdfs/utils/hdfs.py:56-73), generalized from "the
-most recent file" to "all undersized files" (the mtime-max selection
-at hdfs.py:85-88 is the k=1 special case).
+stream directory, write them as consolidated files into the commit
+staging dir, then commit by moving the new files in and deleting the
+old ones — the same write-new-then-replace commit the reference
+performs per file (reference: target_hdfs/utils/hdfs.py:56-73),
+generalized from "the most recent file" to "all undersized files"
+(the mtime-max selection at hdfs.py:85-88 is the k=1 special case).
+
+The commit is plans/commit.py, shared with upsert, soft-delete and
+z-order: one manifest at the dataset root, rolled forward by whichever
+rewriter runs next if a crash interrupts it. A partitioned stream
+stages every partition and commits once at its root. During the
+commit a concurrent reader sees duplicates at worst, never a gap.
 
 Guards preserved:
 - strict schema equality before touching anything (hdfs.py:111-116);
@@ -29,11 +35,11 @@ files: the job only ever deletes files it read.
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
+from target_hdfs_spark.plans import commit
 from target_hdfs_spark.plans.writer import (
     BLOCK_FILL_FACTOR,
     SchemaChangedError,
@@ -58,80 +64,6 @@ class CompactionReport:
     bytes_compacted: int
 
 
-def _fs(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(hconf), jpath, jvm
-
-
-MANIFEST_NAME = "_compact_manifest.json"
-
-
-def _manifest_path(jvm, directory: str):
-    return jvm.org.apache.hadoop.fs.Path(f"{directory.rstrip('/')}/{MANIFEST_NAME}")
-
-
-def _write_manifest(fs, jvm, directory: str, input_names: list[str]) -> None:
-    """Atomically publish the commit intent: the exact input files the
-    in-flight compaction will delete. Written AFTER the consolidated
-    tmp files are durable, BEFORE any of them moves in — from that
-    point the commit can always be completed by recovery."""
-    tmp = jvm.org.apache.hadoop.fs.Path(
-        f"{directory.rstrip('/')}/{MANIFEST_NAME}.tmp"
-    )
-    dst = _manifest_path(jvm, directory)
-    out = fs.create(tmp, True)
-    out.write(bytearray(json.dumps({"inputs": input_names}).encode("utf-8")))
-    out.close()
-    if fs.exists(dst):
-        fs.delete(dst, False)
-    if not fs.rename(tmp, dst):
-        raise OSError(f"could not publish compaction manifest in {directory}")
-
-
-def _move_tmp_files_in(fs, jvm, tmp_path, directory: str) -> int:
-    moved = 0
-    for status in fs.listStatus(tmp_path):
-        name = status.getPath().getName()
-        if status.isFile() and (
-            name.endswith(".parquet") or name.endswith(".orc")
-        ):
-            dest = jvm.org.apache.hadoop.fs.Path(
-                f"{directory.rstrip('/')}/compacted-{status.getModificationTime()}-{moved}-{name}"
-            )
-            if not fs.rename(status.getPath(), dest):
-                raise OSError(f"rename failed: {status.getPath()} -> {dest}")
-            moved += 1
-    return moved
-
-
-def _recover_interrupted_compaction(fs, jvm, directory: str) -> None:
-    """Complete a compaction commit that crashed mid-way. The manifest
-    marks the point of no return: once it exists, the consolidated
-    files are durable in the tmp dir, so recovery finishes the commit
-    (move remaining tmp files in, delete the listed inputs, drop the
-    manifest). Without this, a crash between move-in and input-delete
-    would leave the rows duplicated PERMANENTLY — and a rerun would
-    bake the duplicates into the compacted output."""
-    man = _manifest_path(jvm, directory)
-    if not fs.exists(man):
-        return
-    stream = fs.open(man)
-    body = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    stream.close()
-    inputs = json.loads(body)["inputs"]
-    tmp_path = jvm.org.apache.hadoop.fs.Path(directory.rstrip("/") + "/_compact_tmp")
-    if fs.exists(tmp_path):
-        _move_tmp_files_in(fs, jvm, tmp_path, directory)
-        fs.delete(tmp_path, True)
-    for name in inputs:
-        p = jvm.org.apache.hadoop.fs.Path(f"{directory.rstrip('/')}/{name}")
-        if fs.exists(p):
-            fs.delete(p, False)
-    fs.delete(man, False)
-
-
 def list_data_files(
     spark: SparkSession, directory: str, fmt: str = "parquet"
 ) -> list[FileEntry]:
@@ -140,7 +72,7 @@ def list_data_files(
     when the directory is missing (reference:
     target_hdfs/utils/hdfs.py:76-82)."""
     suffix = f".{fmt}"
-    fs, jpath, _ = _fs(spark, directory)
+    fs, jpath, _ = commit.hadoop_fs(spark, directory)
     if not fs.exists(jpath):
         return []
     out = []
@@ -164,56 +96,49 @@ def most_recent_file(spark: SparkSession, directory: str) -> FileEntry | None:
 
 def list_partition_dirs(spark: SparkSession, directory: str) -> list[str]:
     """Leaf `col=value` directories of a (possibly multi-column)
-    partitioned dataset — recurses through nested partition levels
-    (`year=2024/month=1/...`) and returns the directories that
-    actually hold data files; a single-level listing would make the
-    repair job a silent no-op for multi-column partitioning."""
-    fs, jpath, jvm = _fs(spark, directory)
+    partitioned dataset, relative to `directory` — recurses through
+    nested partition levels (`year=2024/month=1`) and returns the
+    directories that actually hold data files; a single-level listing
+    would make the repair job a silent no-op for multi-column
+    partitioning."""
+    fs, jpath, _ = commit.hadoop_fs(spark, directory)
     if not fs.exists(jpath):
         return []
     leaves: list[str] = []
 
-    def walk(p) -> None:
+    def walk(p, rel: str) -> None:
         children = [
             s for s in fs.listStatus(p)
             if s.isDirectory() and "=" in s.getPath().getName()
         ]
-        if children:
-            for s in children:
-                walk(s.getPath())
-        elif "=" in p.getName():
-            leaves.append(p.toString())
+        for s in children:
+            walk(s.getPath(), f"{rel}{s.getPath().getName()}/")
+        if not children and rel:
+            leaves.append(rel.rstrip("/"))
 
-    walk(jpath)
+    walk(jpath, "")
     return leaves
 
 
-def compact_directory(
+def _stage_compaction(
     spark: SparkSession,
-    directory: str,
-    size_limit: int | None = None,
-    expected_schema=None,
-    compression: str = "gzip",
-    fmt: str = "parquet",
-) -> CompactionReport:
-    """Merge all undersized data files in one directory.
-
-    `size_limit` defaults to 85% of the FS block size (reference:
-    target_hdfs/utils/hdfs.py:97-101). Files >= the limit are never
-    touched (the reference's new-file condition, hdfs.py:104-106).
-    `compression` should match the dataset's configured codec
-    (TargetConfig.compression, default gzip) so compaction never
-    silently changes the codec of a dataset.
-    """
-    limit = size_limit or int(get_block_size(spark) * BLOCK_FILL_FACTOR)
-    fs, _, jvm = _fs(spark, directory)
-    if fs.exists(jvm.org.apache.hadoop.fs.Path(directory)):
-        _recover_interrupted_compaction(fs, jvm, directory)
+    root: str,
+    rel: str,
+    limit: int,
+    expected_schema,
+    compression: str,
+    fmt: str,
+) -> tuple[CompactionReport, list[str]]:
+    """Write the undersized files of `<root>/<rel>` as consolidated
+    files into the same relative place under the commit staging dir.
+    Returns the report as it stands once the commit is done, and the
+    input files to delete, relative to `root`."""
+    directory = f"{root.rstrip('/')}/{rel}" if rel else root
     files = list_data_files(spark, directory, fmt)
     small = [f for f in files if f.size < limit]
     report = CompactionReport(directory, len(files), 0, len(files), 0)
     if len(small) < 2:
-        return report
+        return report, []
 
     # mergeSchema: an additively-evolved directory mixes old files
     # missing newer columns with new files that have them; a
@@ -232,16 +157,6 @@ def compact_directory(
             f"{_normalize(small_df.schema)} != {_normalize(expected_schema)}"
         )
 
-    # tmp dir INSIDE the directory with a leading underscore: Spark and
-    # Hive skip `_`/`.`-prefixed paths during listing and partition
-    # discovery, so concurrent readers of a partitioned root never see
-    # the in-flight rewrite (a sibling dir named `<part>=v__compact_tmp`
-    # would surface as a bogus partition value with duplicate rows).
-    tmp_dir = directory.rstrip("/") + "/_compact_tmp"
-    tmp_path = jvm.org.apache.hadoop.fs.Path(tmp_dir)
-    if fs.exists(tmp_path):
-        fs.delete(tmp_path, True)
-
     total_bytes = sum(f.size for f in small)
     n_out = max(1, -(-total_bytes // limit))  # ceil-div: fill to the limit
     # ORC names its codecs differently (gzip -> zlib); translate the
@@ -251,37 +166,69 @@ def compact_directory(
         from target_hdfs_spark.config import ORC_COMPRESSION
 
         compression = ORC_COMPRESSION.get(compression, compression)
+    target = commit.staging(root) + (f"/{rel}" if rel else "")
     (
         small_df.repartition(n_out)
         .write.mode("overwrite")
         .option("compression", compression)
         .format(fmt)
-        .save(tmp_dir)
+        .save(target)
+    )
+    n_new = len(commit.live_files(spark, target))
+    prefix = f"{rel}/" if rel else ""
+    deletes = [prefix + f.path.rstrip("/").rsplit("/", 1)[-1] for f in small]
+    files_after = len(files) - len(small) + n_new
+    return (
+        CompactionReport(directory, len(files), len(small), files_after, total_bytes),
+        deletes,
     )
 
-    # Commit: publish the manifest (intent = these inputs are now
-    # superseded by the durable tmp files), move consolidated files
-    # in, delete the inputs, drop the manifest. New data becomes
-    # visible before old data disappears, so a concurrent reader sees
-    # duplicates at worst, never a gap (same ordering as the
-    # reference's copy-to-_new-then-rename, target_hdfs/utils/
-    # hdfs.py:56-73) — and a crash anywhere after the manifest is
-    # finished by _recover_interrupted_compaction on the next run.
-    input_names = [f.path.rstrip("/").rsplit("/", 1)[-1] for f in small]
-    _write_manifest(fs, jvm, directory, input_names)
-    moved = _move_tmp_files_in(fs, jvm, tmp_path, directory)
-    for f in small:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f.path), False)
-    fs.delete(tmp_path, True)
-    fs.delete(_manifest_path(jvm, directory), False)
 
-    return CompactionReport(
-        directory=directory,
-        files_before=len(files),
-        files_compacted=len(small),
-        files_after=len(files) - len(small) + moved,
-        bytes_compacted=total_bytes,
-    )
+def _compact(
+    spark: SparkSession,
+    root: str,
+    partitioned: bool,
+    size_limit: int | None,
+    expected_schema,
+    compression: str,
+    fmt: str,
+) -> list[CompactionReport]:
+    """Stage every directory's consolidated files, then commit them all
+    at once at the dataset root."""
+    limit = size_limit or int(get_block_size(spark) * BLOCK_FILL_FACTOR)
+    commit.recover(spark, root)
+    rels = list_partition_dirs(spark, root) if partitioned else [""]
+    staged = [
+        _stage_compaction(spark, root, rel, limit, expected_schema, compression, fmt)
+        for rel in rels
+    ]
+    deletes = [d for _, ds in staged for d in ds]
+    if deletes:
+        commit.commit(spark, root, deletes)
+    return [report for report, _ in staged]
+
+
+def compact_directory(
+    spark: SparkSession,
+    directory: str,
+    size_limit: int | None = None,
+    expected_schema=None,
+    compression: str = "gzip",
+    fmt: str = "parquet",
+) -> CompactionReport:
+    """Merge all undersized data files in one unpartitioned dataset
+    directory.
+
+    `size_limit` defaults to 85% of the FS block size (reference:
+    target_hdfs/utils/hdfs.py:97-101). Files >= the limit are never
+    touched (the reference's new-file condition, hdfs.py:104-106).
+    `compression` should match the dataset's configured codec
+    (TargetConfig.compression, default gzip) so compaction never
+    silently changes the codec of a dataset.
+    """
+    return _compact(
+        spark, directory, False, size_limit, expected_schema, compression, fmt
+    )[0]
 
 
 def compact_stream(
@@ -297,9 +244,9 @@ def compact_stream(
     reference disables append mode entirely for partition_cols,
     reference: target_hdfs/sinks.py:38 — compacting within each
     partition directory is the generalization that keeps its
-    invariant: files never move across partition boundaries)."""
-    dirs = list_partition_dirs(spark, stream_dir) if partitioned else [stream_dir]
-    return [
-        compact_directory(spark, d, size_limit, compression=compression, fmt=fmt)
-        for d in dirs
-    ]
+    invariant: files never move across partition boundaries). Every
+    partition is staged under the stream root and committed there
+    once, so any other rewriter's recovery sees the commit."""
+    return _compact(
+        spark, stream_dir, partitioned, size_limit, None, compression, fmt
+    )

@@ -46,6 +46,7 @@ from target_hdfs_spark.operators.packing import (
     _PK_CTX,
     packed_token_frame,
 )
+from target_hdfs_spark.plans.commit import hadoop_fs
 from target_hdfs_spark.sources.readers import load_table
 
 CHUNKS_PER_BAND = 1024  # hive-partition granularity of the output
@@ -112,12 +113,7 @@ def read_band(spark: SparkSession, out_dir: str, band_id: int) -> DataFrame:
     interrupted — the remediation is to rerun `write_packed_dataset`
     (mode=overwrite replaces any partial output; reruns are
     byte-identical by construction)."""
-    from target_hdfs_spark.plans.compaction import _fs
-
-    fs, _, jvm = _fs(spark, out_dir)
-    marker = jvm.org.apache.hadoop.fs.Path(
-        f"{out_dir.rstrip('/')}/_SUCCESS"
-    )
+    fs, marker, _ = hadoop_fs(spark, f"{out_dir.rstrip('/')}/_SUCCESS")
     if not fs.exists(marker):
         raise IncompletePackError(
             f"packed dataset at {out_dir} has no _SUCCESS marker — the "

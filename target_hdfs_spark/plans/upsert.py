@@ -3,7 +3,8 @@ the read-modify-write generalization of the reference's defining
 trick (download most-recent file, modify buffer, atomically replace:
 target_hdfs/sinks.py:31-44 + utils/hdfs.py:56-73). The reference
 mutates one file; these jobs mutate a dataset with the same
-write-new-then-swap commit discipline.
+write-new-then-replace discipline, through the commit protocol every
+dataset rewrite shares (plans/commit.py).
 
 Without a table format (Delta/Iceberg) an upsert must rewrite data
 files; the cost control is *touching only the partitions that contain
@@ -13,10 +14,17 @@ affected keys*:
    partitions the updates land in AND the partitions currently holding
    old copies of those keys (keys may move across partitions);
 2. rewrite: for affected partitions only — anti-join out the updated
-   keys, union the new rows, write to a temp dir;
-3. commit: swap rewritten partitions in (stage-old -> rename-new ->
-   delete-old, with crash recovery), leave every other partition
+   keys, union the new rows, write to the commit staging dir;
+3. commit: move the staged files in, then delete the affected
+   partitions' old files (a partition whose keys all moved away is
+   left empty and dropped); every other partition stays
    byte-untouched.
+
+Each job first recovers any interrupted commit at the dataset root —
+its own, or a compaction's, upsert's, soft-delete's or z-order's —
+before it reads, so a crash never bakes duplicates into a rewrite.
+During a commit a concurrent reader sees duplicates at worst, never a
+missing partition or dataset.
 
 Scale: an upsert touching 0.1% of partitions rewrites 0.1% of the
 dataset; the key probe is a semi-join that prunes to partition values
@@ -28,190 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from target_hdfs_spark.plans import commit
 from target_hdfs_spark.plans.writer import SchemaChangedError, _normalize
-
-
-def _fs_for(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(hconf), jvm
-
-
-def _path_exists(spark: SparkSession, path: str) -> bool:
-    fs, jvm = _fs_for(spark, path)
-    return bool(fs.exists(jvm.org.apache.hadoop.fs.Path(path)))
-
-
-def _recover_interrupted_swap(fs, jvm, dst_dir: str) -> None:
-    """Heal the one non-atomic window of :func:`_swap_dirs`: a crash
-    between stage-old and rename-new leaves `dst` absent with the data
-    stranded at `dst__old`. Restore it before doing anything else —
-    otherwise a subsequent writer would treat the dataset as missing
-    and discard the staged copy."""
-    dst = jvm.org.apache.hadoop.fs.Path(dst_dir)
-    old = jvm.org.apache.hadoop.fs.Path(dst_dir.rstrip("/") + "__old")
-    if not fs.exists(dst) and fs.exists(old):
-        if not fs.rename(old, dst):
-            raise OSError(f"swap recovery failed: {old} -> {dst}")
-
-
-def _pending_deletes_path(jvm, path: str):
-    return jvm.org.apache.hadoop.fs.Path(
-        path.rstrip("/") + "/__upsert_pending_deletes"
-    )
-
-
-def _upsert_tmp_path(path: str) -> str:
-    return path.rstrip("/") + "__upsert_tmp"
-
-
-def _write_upsert_manifest(
-    fs, jvm, path: str, written: list[str], to_delete: list[str]
-) -> None:
-    """Durably record the partitioned-merge commit plan BEFORE the
-    partition-swap loop runs: `S <dir>` lines are partitions staged in
-    the tmp dataset that must be swapped in, `D <dir>` lines are stale
-    moved-key partitions that must be dropped once every swap has
-    committed. Writing the plan first means a crash at ANY later point
-    is recoverable by roll-forward (:func:`_recover_pending_deletes`);
-    the old scheme (deletes-only manifest written after the swaps)
-    left a window between the last swap and the manifest write where
-    moved-key stale copies survived permanently.
-
-    The ``#end`` terminator makes the manifest itself crash-safe: a
-    write torn mid-flush leaves a file WITHOUT the terminator, and
-    recovery treats that as "commit never started" (correct — the
-    manifest completes before any swap runs) instead of rolling a
-    partial plan forward."""
-    lines = ["#upsert-manifest-v2"]
-    lines += [f"S {n}" for n in written]
-    lines += [f"D {n}" for n in to_delete]
-    lines.append("#end")
-    out = fs.create(_pending_deletes_path(jvm, path), True)
-    try:
-        out.write(bytearray("\n".join(lines).encode("utf-8")))
-    finally:
-        out.close()
-
-
-def _recover_pending_deletes(fs, jvm, path: str) -> None:
-    """Roll an interrupted partitioned-merge commit forward. The
-    manifest is written before the swap loop, so on entry each `S`
-    partition is in one of two states — already committed (its tmp
-    copy was renamed away) or still staged under the tmp dataset —
-    and re-running the swap for the latter completes the commit.
-    Only after every `S` partition is live are the `D` (stale
-    moved-key) partitions dropped: their rows' replacements are
-    guaranteed committed by then, so the deletes can never lose data.
-    Legacy deletes-only manifests (no `#upsert-manifest-v2` header,
-    written post-swap by older versions) execute directly. Idempotent
-    throughout — a crash during recovery just recovers again."""
-    man = _pending_deletes_path(jvm, path)
-    if not fs.exists(man):
-        return
-    stream = fs.open(man)
-    try:
-        # byte-at-a-time read: py4j passes byte[] buffers by VALUE, so
-        # the bulk read(byte[]) overload can't return data through a
-        # Python bytearray; manifests are tiny (dir names only)
-        data = bytearray()
-        while True:
-            b = stream.read()
-            if b < 0:
-                break
-            data.append(b)
-    finally:
-        stream.close()
-    lines = data.decode("utf-8").splitlines()
-    tmp = _upsert_tmp_path(path)
-    tmp_jpath = jvm.org.apache.hadoop.fs.Path(tmp)
-    if lines and lines[0] == "#upsert-manifest-v2":
-        if not lines or lines[-1] != "#end":
-            # torn manifest write: the plan is incomplete, but the
-            # manifest is written BEFORE any swap, so nothing has
-            # touched the live dataset — discard the aborted commit
-            # (the caller's at-least-once retry re-runs the upsert)
-            fs.delete(man, False)
-            if fs.exists(tmp_jpath):
-                fs.delete(tmp_jpath, True)
-            return
-        swaps = [ln[2:] for ln in lines[1:] if ln.startswith("S ")]
-        deletes = [ln[2:] for ln in lines[1:] if ln.startswith("D ")]
-        for name in swaps:
-            staged = jvm.org.apache.hadoop.fs.Path(f"{tmp}/{name}")
-            if fs.exists(staged):
-                # _recover_interrupted_partition_swaps already ran, so
-                # the destination is consistent (old or new content);
-                # staged-still-present means this swap never committed.
-                _swap_dirs(fs, jvm, staged.toString(), f"{path.rstrip('/')}/{name}")
-    else:
-        deletes = [ln for ln in lines if ln]
-    for name in deletes:
-        p = jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/{name}")
-        if name and fs.exists(p):
-            fs.delete(p, True)
-    fs.delete(man, False)
-    if fs.exists(tmp_jpath):
-        fs.delete(tmp_jpath, True)
-
-
-def _recover_interrupted_partition_swaps(fs, jvm, path: str) -> None:
-    """Heal the per-partition swap crash window of the partitioned
-    upsert: a crash between staging a partition aside and committing
-    its replacement strands `<col>=<v>__old` next to a missing
-    `<col>=<v>`. This MUST run before any read of the dataset —
-    Spark's partition discovery would parse `v__old` as a bogus
-    partition value and surface stale rows."""
-    base = jvm.org.apache.hadoop.fs.Path(path)
-    if not fs.exists(base):
-        return
-    for status in fs.listStatus(base):
-        name = status.getPath().getName()
-        if not status.isDirectory() or "=" not in name or not name.endswith("__old"):
-            continue
-        dst = jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/{name[: -len('__old')]}")
-        if fs.exists(dst):
-            # crash landed after the commit rename, before cleanup:
-            # the new partition is live, drop the staged copy
-            fs.delete(status.getPath(), True)
-        elif not fs.rename(status.getPath(), dst):
-            raise OSError(f"partition swap recovery failed: {name}")
-
-
-def _swap_dirs(fs, jvm, new_dir: str, dst_dir: str) -> None:
-    """Directory replacement with no no-data window in normal
-    operation: stage old aside, rename new in, delete old. The one
-    crash window (between the two renames) leaves the data stranded at
-    `dst__old`; callers run :func:`_recover_interrupted_swap` on entry
-    so the next job heals it before reading."""
-    dst = jvm.org.apache.hadoop.fs.Path(dst_dir)
-    old = jvm.org.apache.hadoop.fs.Path(dst_dir.rstrip("/") + "__old")
-    new = jvm.org.apache.hadoop.fs.Path(new_dir)
-    if fs.exists(old):
-        fs.delete(old, True)
-    had_old = fs.exists(dst)
-    if had_old and not fs.rename(dst, old):
-        raise OSError(f"swap: could not stage old dataset {dst}")
-    if not fs.rename(new, dst):
-        if had_old:
-            fs.rename(old, dst)  # roll back
-        raise OSError(f"swap: could not commit new dataset {dst}")
-    if had_old:
-        fs.delete(old, True)
-
-
-def recover_dataset(spark: SparkSession, path: str) -> None:
-    """Entry-point recovery for a dataset managed by the swap
-    protocols: heal a whole-dataset swap stranded at `path__old` and
-    any per-partition swaps stranded at `<part>=<v>__old`. Every
-    engine job runs this on entry; exposed publicly so operators can
-    also heal a dataset before handing it to plain readers."""
-    fs, jvm = _fs_for(spark, path)
-    _recover_interrupted_swap(fs, jvm, path)
-    _recover_interrupted_partition_swaps(fs, jvm, path)
-    if fs.exists(jvm.org.apache.hadoop.fs.Path(path)):
-        _recover_pending_deletes(fs, jvm, path)
 
 
 def _norm_for_compare(schema, partition_col: str | None):
@@ -289,17 +115,14 @@ def upsert(
                 "round-trip boolean hive partitions; cast to string first"
             )
     _reject_duplicate_update_keys(updates, keys)
-    fs, jvm = _fs_for(spark, path)
-    _recover_interrupted_swap(fs, jvm, path)
-    _recover_interrupted_partition_swaps(fs, jvm, path)
-    if _path_exists(spark, path):
-        _recover_pending_deletes(fs, jvm, path)
-    if not _path_exists(spark, path):
-        # genuinely first write: nothing to merge. (An existence check,
-        # NOT a bare try/except around the read — a transient read
-        # failure must surface, not silently overwrite the dataset.)
+    commit.recover(spark, path)
+    live = commit.live_files(spark, path)
+    if not live:
+        # genuinely first write: nothing to merge. (A listing, NOT a
+        # bare try/except around the read — a transient read failure
+        # must surface, not silently overwrite the dataset.)
         # Bootstrap MUST honor partition_col: an unpartitioned bootstrap
-        # followed by a partitioned merge would rename partition dirs in
+        # followed by a partitioned merge would move partition dirs in
         # next to root-level part files and lose the untouched keys.
         writer = updates.write.mode("overwrite")
         if partition_col:
@@ -315,21 +138,19 @@ def upsert(
             f"{_normalize(existing.schema)} != {_normalize(updates.schema)}"
         )
 
-    tmp = _upsert_tmp_path(path)
+    staging = commit.staging(path)
 
     if partition_col:
-        # A partitioned merge over an unpartitioned layout would rename
-        # partition dirs next to root-level part files and silently lose
-        # data — refuse instead.
-        base_jpath = jvm.org.apache.hadoop.fs.Path(path)
-        for status in fs.listStatus(base_jpath):
-            name = status.getPath().getName()
-            if status.isFile() and not name.startswith(("_", ".")):
-                raise ValueError(
-                    f"upsert(partition_col={partition_col!r}) over an "
-                    f"unpartitioned dataset at {path}: found root-level data "
-                    f"file {name!r}; rewrite the dataset partitioned first"
-                )
+        # A partitioned merge over an unpartitioned layout would move
+        # partition dirs in next to root-level part files and silently
+        # lose data — refuse instead.
+        root_files = [f for f in live if "/" not in f]
+        if root_files:
+            raise ValueError(
+                f"upsert(partition_col={partition_col!r}) over an "
+                f"unpartitioned dataset at {path}: found root-level data "
+                f"file {root_files[0]!r}; rewrite the dataset partitioned first"
+            )
         # affected partitions = where updates land + where old copies
         # of the updated keys currently live (keys can move partitions).
         # Collect each value alongside its Spark string rendering: the
@@ -357,66 +178,34 @@ def upsert(
         merged = kept.join(
             anti_keys, _keys_condition(kept, anti_keys, keys), "left_anti"
         ).unionByName(updates)
-        (
-            merged.write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(tmp)
-        )
-        # The partition directories Spark ACTUALLY wrote: the tmp
-        # listing carries the hive-escaped names (%XX escapes,
-        # __HIVE_DEFAULT_PARTITION__ for null). A rewritten partition
-        # that came out EMPTY (all its rows were keys that moved away)
-        # won't appear in tmp — those destinations must be dropped.
-        tmp_jpath = jvm.org.apache.hadoop.fs.Path(tmp)
-        written = []
-        for status in fs.listStatus(tmp_jpath):
-            name = status.getPath().getName()
-            if status.isDirectory() and "=" in name:
-                written.append(name)
-        # stale moved-key partitions: affected but produced no output
-        # rows (every row they held was a key that moved elsewhere).
-        # Compare decoded directory values against the SPARK string
-        # rendering of each affected value (matches how Spark names
-        # hive directories).
+        merged.write.mode("overwrite").partitionBy(partition_col).parquet(staging)
+        # The old files of every affected partition are replaced. A
+        # partition is affected when Spark staged it (the staged
+        # listing carries the exact hive-escaped names: %XX escapes,
+        # __HIVE_DEFAULT_PARTITION__ for null) or when its decoded
+        # directory value matches the SPARK string rendering of an
+        # affected value — the latter catches partitions that came
+        # out EMPTY because every key they held moved elsewhere.
+        staged_parts = {f.split("/", 1)[0] for f in commit.live_files(spark, staging)}
         affected_strs = {r["_ps"] for r in affected_rows if r["_ps"] is not None}
-        written_set = set(written)
-        base = jvm.org.apache.hadoop.fs.Path(path)
-        to_delete = []
-        for status in fs.listStatus(base):
-            name = status.getPath().getName()
-            if not status.isDirectory() or "=" not in name or name in written_set:
-                continue
-            value = _partition_value_of(name, partition_col)
-            if (value is None and None in affected) or (
-                value is not None and value in affected_strs
-            ):
-                to_delete.append(name)
-        # Commit protocol: durably record the FULL plan (swaps AND
-        # stale deletions) before touching the live dataset, so a crash
-        # anywhere in the loop below is healed by roll-forward on the
-        # next entry (_recover_pending_deletes re-runs un-committed
-        # swaps from tmp, then executes the deletions). Deletions run
-        # only after every swap commits — their rows' replacements are
-        # live by then, so no crash point can lose data.
-        _write_upsert_manifest(fs, jvm, path, written, to_delete)
-        for name in written:
-            # same stage-old/rename/rollback protocol as the
-            # whole-dataset path — one implementation, two call sites
-            _swap_dirs(fs, jvm, f"{tmp}/{name}", f"{path.rstrip('/')}/{name}")
-        for name in to_delete:
-            fs.delete(
-                jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/{name}"),
-                True,
-            )
-        fs.delete(_pending_deletes_path(jvm, path), False)
-        fs.delete(tmp_jpath, True)
+
+        def replaced(part_dir: str) -> bool:
+            if part_dir in staged_parts:
+                return True
+            if "=" not in part_dir:
+                return False
+            value = _partition_value_of(part_dir, partition_col)
+            return None in affected if value is None else value in affected_strs
+
+        deletes = [f for f in live if replaced(f.split("/", 1)[0])]
     else:
         anti_keys = F.broadcast(updates.select(*keys))
         merged = existing.join(
             anti_keys, _keys_condition(existing, anti_keys, keys), "left_anti"
         ).unionByName(updates)
-        merged.write.mode("overwrite").parquet(tmp)
-        _swap_dirs(fs, jvm, tmp, path)
+        merged.write.mode("overwrite").parquet(staging)
+        deletes = live
+    commit.commit(spark, path, deletes)
 
 
 def _partition_value_of(dir_name: str, partition_col: str):
@@ -446,7 +235,8 @@ def soft_delete_older_versions(
     version but never wrote records — a full-truncate refresh) is a
     no-op, not a crash.
 
-    Implemented as a whole-dataset rewrite with the swap commit.
+    Implemented as a whole-dataset rewrite through the shared commit:
+    every live file listed before the rewrite read is replaced.
     ``partition_cols``/``fmt`` MUST match the stream's write config:
     a plain rewrite of a hive-partitioned dataset would flatten the
     partition column into a data column (the next partitioned append
@@ -461,17 +251,10 @@ def soft_delete_older_versions(
             f"got {fmt!r} (delta/iceberg manage versions in their own "
             "metadata layer)"
         )
-    fs, jvm = _fs_for(spark, path)
-    _recover_interrupted_swap(fs, jvm, path)
-    _recover_interrupted_partition_swaps(fs, jvm, path)
-    if not _path_exists(spark, path):
+    commit.recover(spark, path)
+    live = commit.live_files(spark, path)
+    if not live:
         return 0
-    # An interrupted partitioned upsert may have left its commit
-    # manifest (pending swaps/deletes) behind; without healing it the
-    # mergeSchema read below would resurrect stale moved-key partitions
-    # INTO the rewrite, making the duplicates permanent once _swap_dirs
-    # replaces the dataset (and its manifest) wholesale.
-    _recover_pending_deletes(fs, jvm, path)
     existing = (
         spark.read.option("mergeSchema", "true").format(fmt).load(path)
     )
@@ -496,10 +279,9 @@ def soft_delete_older_versions(
         deleted_at_col,
         F.when(stale, F.current_timestamp()).otherwise(F.col(deleted_at_col)),
     )
-    tmp = path.rstrip("/") + "__softdel_tmp"
     writer = updated.write.mode("overwrite").format(fmt)
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
-    writer.save(tmp)
-    _swap_dirs(fs, jvm, tmp, path)
+    writer.save(commit.staging(path))
+    commit.commit(spark, path, live)
     return n_stale

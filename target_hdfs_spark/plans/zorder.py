@@ -11,12 +11,21 @@ filter columns, where partitioning already serves the first.
 All integer bit arithmetic — deterministic, and exercised as an
 oracle-checked query (q91) plus a file-statistics test proving the
 range narrowing (tests/test_zorder.py).
+
+The write replaces any dataset at the target path through the commit
+every dataset rewrite shares (plans/commit.py): the new files are
+staged, then moved in before the old ones are deleted. A mid-job
+failure leaves the old dataset intact, a crash mid-commit is finished
+by the next rewriter, and a concurrent reader sees duplicates at
+worst, never a missing dataset.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from target_hdfs_spark.plans import commit
 
 ZBITS = 16
 
@@ -59,12 +68,12 @@ def write_zordered(
     any global sort-write, paid once at write time for every future
     scan's benefit.
     """
-    from target_hdfs_spark.plans.upsert import (
-        _fs_for,
-        _recover_interrupted_swap,
-        _swap_dirs,
-    )
-
+    # `df` may read `path` itself — an in-place re-layout — and then
+    # its file listing predates the recovery: list it again.
+    spark = df.sparkSession
+    if commit.recover(spark, path):
+        _relist_files(df)
+    live = commit.live_files(spark, path)
     bounds = df.agg(
         F.min(F.col(col_a).cast("double")).alias("a_lo"),
         F.max(F.col(col_a).cast("double")).alias("a_hi"),
@@ -75,11 +84,6 @@ def write_zordered(
         quantize(F.col(col_a), F.col("a_lo"), F.col("a_hi")),
         quantize(F.col(col_b), F.col("b_lo"), F.col("b_hi")),
     )
-    # write-tmp-then-swap (the repo's rewrite discipline): re-laying-
-    # out an existing dataset must not destroy it on a mid-job failure
-    fs, jvm = _fs_for(df.sparkSession, path)
-    _recover_interrupted_swap(fs, jvm, path)
-    tmp = path.rstrip("/") + "__zorder_tmp"
     (
         df.crossJoin(F.broadcast(bounds))
         .withColumn("_z", z)
@@ -88,6 +92,21 @@ def write_zordered(
         .drop("_z", "a_lo", "a_hi", "b_lo", "b_hi")
         .write.mode("overwrite")
         .option("compression", compression)
-        .parquet(tmp)
+        .parquet(commit.staging(path))
     )
-    _swap_dirs(fs, jvm, tmp, path)
+    commit.commit(spark, path, live)
+
+
+def _relist_files(df: DataFrame) -> None:
+    """Refresh the file listing of every file source `df` reads. Spark
+    lists a path once, when the DataFrame is created; a file that
+    recovery deleted since would fail the job, and a file it moved in
+    would be missed."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() != "LogicalRelation":
+            continue
+        relation = leaf.relation()
+        if relation.getClass().getSimpleName() == "HadoopFsRelation":
+            relation.location().refresh()

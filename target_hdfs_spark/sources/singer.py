@@ -41,14 +41,10 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from target_hdfs_spark.config import TargetConfig
+from target_hdfs_spark.plans.commit import hadoop_fs
 from target_hdfs_spark.plans.writer import write_stream
 from target_hdfs_spark.sources.jsonschema import jsonschema_to_spark
-from target_hdfs_spark.transforms import (
-    apply_stream_map,
-    flatten,
-    with_extra_fields,
-    with_record_metadata,
-)
+from target_hdfs_spark.transforms import shape_records
 
 
 class RecordValidationError(ValueError):
@@ -381,9 +377,7 @@ class SingerPipe:
             return
         base = f"{self.config.destination_path.rstrip('/')}/_dlq"
         if not self._dlq_layout_checked:
-            from target_hdfs_spark.plans.compaction import _fs
-
-            fs, jpath, _ = _fs(self.spark, base)
+            fs, jpath, _ = hadoop_fs(self.spark, base)
             if fs.exists(jpath):
                 legacy = [
                     s.getPath().getName()
@@ -415,7 +409,17 @@ class SingerPipe:
             buf.files_flushed += 1
             buf.records.clear()
             return
-        df = self._shape(name, _arrow_frame(self.spark, buf.records, buf.schema), buf)
+        df = shape_records(
+            _arrow_frame(self.spark, buf.records, buf.schema), self.config, name
+        )
+        if self.config.add_record_metadata:
+            # ALWAYS stamp the version column (null before any
+            # activation): adding it only post-activation changes the
+            # on-disk schema mid-stream and trips the strict drift
+            # guard — the same stability rule _sdc_deleted_at follows
+            df = df.withColumn(
+                "_sdc_table_version", F.lit(buf.version).cast("bigint")
+            )
         write_stream(
             self.spark,
             df,
@@ -426,24 +430,6 @@ class SingerPipe:
         buf.rows_written += len(buf.records)
         buf.files_flushed += 1
         buf.records.clear()
-
-    def _shape(self, name: str, df: DataFrame, buf: _StreamBuffer) -> DataFrame:
-        df = flatten(df, self.config.flattening_max_depth)
-        smap = self.config.stream_maps.get(name)
-        if smap:
-            df = apply_stream_map(df, smap)
-        df = with_extra_fields(df, self.config.extra_fields, self.config.extra_fields_types)
-        if self.config.add_record_metadata:
-            df = with_record_metadata(df)
-            # ALWAYS stamp the version column (null before any
-            # activation): adding it only post-activation changes the
-            # on-disk schema mid-stream and trips the strict drift
-            # guard — the same stability rule _sdc_deleted_at follows
-            df = df.withColumn(
-                "_sdc_table_version",
-                F.lit(buf.version).cast("bigint"),
-            )
-        return df
 
 
 def ingest_jsonl_dir(
@@ -465,11 +451,5 @@ def ingest_jsonl_dir(
         return  # stream removed by stream map: no read, no sink
     schema = jsonschema_to_spark(json_schema)
     df = spark.read.schema(schema).option("mode", "FAILFAST").json(jsonl_path)
-    df = flatten(df, config.flattening_max_depth)
-    smap = config.stream_maps.get(stream_name)
-    if smap:
-        df = apply_stream_map(df, smap)
-    df = with_extra_fields(df, config.extra_fields, config.extra_fields_types)
-    if config.add_record_metadata:
-        df = with_record_metadata(df)
+    df = shape_records(df, config, stream_name)
     write_stream(spark, df, config.stream_path(stream_name), config)

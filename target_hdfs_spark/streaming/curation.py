@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from target_hdfs_spark.functions.textfuncs import tokens
+from target_hdfs_spark.plans.commit import hadoop_fs
 
 # Quality thresholds — the batch gate's exact rules (operators/text.py
 # q54_quality_filter); kept numerically identical so stream and batch
@@ -56,10 +57,7 @@ def quality_gate(df: DataFrame) -> DataFrame:
 
 def _index_batches(spark: SparkSession, index_dir: str) -> dict[int, str]:
     """batch_id -> path for every committed index directory."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(index_dir)
-    fs = root.getFileSystem(hconf)
+    fs, root, _ = hadoop_fs(spark, index_dir)
     if not fs.exists(root):
         return {}
     return {
@@ -108,9 +106,7 @@ def _prune_index(
     batches = _index_batches(spark, index_dir)
     prior = sorted(b for b in batches if b < batch_id)[-retention_batches:]
     keep = set(prior) | {batch_id}
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.Path(index_dir).getFileSystem(hconf)
+    fs, _, jvm = hadoop_fs(spark, index_dir)
     for b, path in batches.items():
         if b <= batch_id and b not in keep:
             fs.delete(jvm.org.apache.hadoop.fs.Path(path), True)

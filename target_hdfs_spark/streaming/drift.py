@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from target_hdfs_spark.plans.commit import hadoop_fs
+
 CLASSES = ("click", "error", "purchase", "signup", "view")
 
 
@@ -62,11 +64,8 @@ def latest_readings(spark: SparkSession, sink_dir: str) -> DataFrame | None:
     dir that can fail the read or surface uncommitted rows until the
     replay overwrites it — gate on ``_SUCCESS`` like the repo's other
     sink readers (trending, sampling, CDC)."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
     root_dir = f"{sink_dir}/reading"
-    root = jvm.org.apache.hadoop.fs.Path(root_dir)
-    fs = root.getFileSystem(hconf)
+    fs, root, jvm = hadoop_fs(spark, root_dir)
     if not fs.exists(root):
         return None
     complete = []
@@ -104,10 +103,7 @@ def stream_drift_monitor(
             return
         base_path = f"{sink_dir}/baseline"
         if not baseline_cache:
-            jvm = sess.sparkContext._jvm
-            hconf = sess.sparkContext._jsc.hadoopConfiguration()
-            jpath = jvm.org.apache.hadoop.fs.Path(base_path)
-            fs = jpath.getFileSystem(hconf)
+            fs, jpath, jvm = hadoop_fs(sess, base_path)
             # completeness gate: a crash mid-baseline-write leaves the
             # directory WITHOUT _SUCCESS; existence alone would wedge
             # the stream forever (skip rewrite + fail reading the

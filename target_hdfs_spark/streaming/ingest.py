@@ -27,26 +27,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from target_hdfs_spark.config import TargetConfig
+from target_hdfs_spark.plans.commit import hadoop_fs
 from target_hdfs_spark.plans.writer import write_stream
 from target_hdfs_spark.sources.jsonschema import jsonschema_to_spark
-from target_hdfs_spark.transforms import (
-    apply_stream_map,
-    flatten,
-    with_extra_fields,
-    with_record_metadata,
-)
-
-
-def shape_stream(df: DataFrame, config: TargetConfig, stream_name: str) -> DataFrame:
-    """The shared record-shaping pipeline (identical to batch ingest)."""
-    df = flatten(df, config.flattening_max_depth)
-    smap = config.stream_maps.get(stream_name)
-    if smap:
-        df = apply_stream_map(df, smap)
-    df = with_extra_fields(df, config.extra_fields, config.extra_fields_types)
-    if config.add_record_metadata:
-        df = with_record_metadata(df)
-    return df
+from target_hdfs_spark.transforms import shape_records
 
 
 def stream_jsonl_dir(
@@ -82,13 +66,10 @@ def stream_jsonl_dir(
     marker_dir = checkpoint_dir.rstrip("/") + "/_batch_markers"
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        marker = jvm.org.apache.hadoop.fs.Path(f"{marker_dir}/batch-{batch_id}")
-        fs = marker.getFileSystem(hconf)
+        fs, marker, _ = hadoop_fs(spark, f"{marker_dir}/batch-{batch_id}")
         if fs.exists(marker):
             return  # replayed batch already durable — skip, don't duplicate
-        shaped = shape_stream(batch_df, config, stream_name)
+        shaped = shape_records(batch_df, config, stream_name)
         write_stream(
             spark,
             shaped,

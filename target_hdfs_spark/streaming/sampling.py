@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from target_hdfs_spark.functions.hashing import md5_hash32
+from target_hdfs_spark.plans.commit import hadoop_fs
 
 # complete snapshot versions retained after each successful write (the
 # newest is the live sample; the rest are replay/rollback headroom)
@@ -48,10 +49,7 @@ def _snapshot_versions(spark: SparkSession, sink_dir: str) -> list[int]:
     """Version numbers of COMPLETE (``_SUCCESS``-marked) snapshot
     directories under ``sink_dir``, via the Hadoop FileSystem for the
     sink's scheme (works for file://, hdfs://, s3a://...)."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(sink_dir)
-    fs = root.getFileSystem(hconf)
+    fs, root, jvm = hadoop_fs(spark, sink_dir)
     if not fs.exists(root):
         return []
     versions = []
@@ -74,10 +72,7 @@ def _prune_snapshots(spark: SparkSession, sink_dir: str, keep: int) -> None:
     versions = sorted(_snapshot_versions(spark, sink_dir))
     if not versions:
         return
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(sink_dir)
-    fs = root.getFileSystem(hconf)
+    fs, root, jvm = hadoop_fs(spark, sink_dir)
     for v in versions[:-keep]:
         fs.delete(jvm.org.apache.hadoop.fs.Path(f"{sink_dir}/snap={v}"), True)
     newest = versions[-1]

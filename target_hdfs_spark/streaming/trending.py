@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from target_hdfs_spark.functions.textfuncs import tokens
+from target_hdfs_spark.plans.commit import hadoop_fs
 
 
 def windowed_token_counts_stream(
@@ -100,10 +101,7 @@ def read_trending(spark, sink_dir: str) -> DataFrame:
     commit leaves a half-written directory that the replay will
     overwrite; exposing it early would surface uncommitted rows (the
     same gate the sampling/CDC snapshot protocol applies)."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(sink_dir)
-    fs = root.getFileSystem(hconf)
+    fs, root, jvm = hadoop_fs(spark, sink_dir)
     complete = []
     if fs.exists(root):
         for st in fs.listStatus(root):

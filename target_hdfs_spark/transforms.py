@@ -10,6 +10,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from target_hdfs_spark.config import TargetConfig
+
 SEP = "__"
 
 
@@ -162,4 +164,18 @@ def apply_stream_map(df: DataFrame, stream_map: dict) -> DataFrame:
     ]
     if drops:
         df = df.drop(*drops)
+    return df
+
+
+def shape_records(df: DataFrame, config: TargetConfig, stream_name: str) -> DataFrame:
+    """The record-shaping pipeline every ingest path shares (the
+    Singer pipe, staged JSONL and streaming ingest): flatten, the
+    stream's map, extra fields, then record metadata."""
+    df = flatten(df, config.flattening_max_depth)
+    smap = config.stream_maps.get(stream_name)
+    if smap:
+        df = apply_stream_map(df, smap)
+    df = with_extra_fields(df, config.extra_fields, config.extra_fields_types)
+    if config.add_record_metadata:
+        df = with_record_metadata(df)
     return df

@@ -104,17 +104,19 @@ def test_compact_multi_column_partitions(spark, tmp_path):
 
 
 def test_compact_tmp_dir_invisible_to_readers(spark, tmp_path):
-    """The in-flight tmp dir is underscore-prefixed inside the data
-    dir, so partition discovery never sees it (crash-safety for
-    concurrent readers)."""
+    """The commit staging dir and the manifest being written are
+    underscore-prefixed inside the dataset root, so readers and
+    partition discovery never see an in-flight rewrite."""
     path = tmp_path / "stream"
     _write_small_files(spark, path, n_files=3)
-    # simulate a crashed compaction leaving its tmp dir behind
-    leftover = path / "_compact_tmp"
-    leftover.mkdir()
-    spark.range(99).coalesce(1).write.parquet(str(leftover / "junk"))
+    # simulate a crashed compaction leaving its staging behind
+    leftover = path / "_commit_tmp"
+    spark.range(99).coalesce(1).write.parquet(str(leftover))
+    spark.range(7).coalesce(1).write.parquet(str(leftover / "v=1"))
+    (path / "_commit_manifest.json.tmp").write_text('{"moves": [')
     df = spark.read.parquet(str(path))
-    assert df.count() == 30  # junk under _compact_tmp is not read
+    assert df.columns == ["v"]  # no partition column discovered
+    assert df.count() == 30  # nothing under _commit_tmp is read
 
 
 def test_compact_preserves_configured_compression(spark, tmp_path):

@@ -4,11 +4,47 @@ partition pruning, and ACTIVATE_VERSION soft-delete finalization."""
 from __future__ import annotations
 
 import glob
+import json
+import os
 
 import pytest
 
+from target_hdfs_spark.plans.commit import recover
 from target_hdfs_spark.plans.upsert import soft_delete_older_versions, upsert
 from target_hdfs_spark.plans.writer import SchemaChangedError
+
+
+def _data_files(root) -> list[str]:
+    """Files a Spark reader would see under `root`, relative to it."""
+    out = []
+    for dirpath, dirs, files in os.walk(root):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        out += [
+            os.path.relpath(os.path.join(dirpath, f), root)
+            for f in files
+            if not f.startswith(("_", "."))
+        ]
+    return sorted(out)
+
+
+def _stage(path, *frames, partition_col=None) -> list[str]:
+    """Write each frame as one file into the commit staging dir of the
+    dataset at `path`, as a rewrite would; returns the staged files."""
+    for df in frames:
+        writer = df.coalesce(1).write.mode("append")
+        if partition_col:
+            writer = writer.partitionBy(partition_col)
+        writer.parquet(f"{path}/_commit_tmp")
+    return _data_files(f"{path}/_commit_tmp")
+
+
+def _publish(path, moves, deletes) -> None:
+    with open(f"{path}/_commit_manifest.json", "w") as fh:
+        json.dump({"moves": moves, "deletes": deletes}, fh)
+
+
+def _no_leftovers(path) -> bool:
+    return not glob.glob(f"{path}/_commit*")
 
 
 def test_upsert_replaces_and_inserts(spark, tmp_path):
@@ -106,21 +142,18 @@ def test_partitioned_upsert_null_and_escaped_values(spark, tmp_path):
     assert got == {1: (None, 99.0), 2: ("a:b", 88.0), 3: ("plain", 3.0)}
 
 
-def test_upsert_recovers_from_stale_old_dir(spark, tmp_path):
-    """Crash leftovers: a stale `__old` staging dir from an interrupted
-    earlier swap must not block or corrupt the next upsert."""
+def test_upsert_discards_stale_staging(spark, tmp_path):
+    """Crash leftovers: staging from an aborted rewrite (no published
+    manifest) must not block, or leak rows into, the next upsert."""
     path = str(tmp_path / "t")
     spark.createDataFrame([(1, "a")], "k long, s string").write.parquet(path)
-    # simulate an interrupted swap's leftover
-    stale = tmp_path / "t__old"
-    stale.mkdir()
-    (stale / "junk.txt").write_text("leftover")
+    _stage(path, spark.createDataFrame([(9, "stale")], "k long, s string"))
 
     updates = spark.createDataFrame([(1, "A"), (2, "b")], "k long, s string")
     upsert(spark, updates, path, keys=["k"])
     got = {r.k: r.s for r in spark.read.parquet(path).collect()}
     assert got == {1: "A", 2: "b"}
-    assert not stale.exists()  # cleaned up by the swap
+    assert _no_leftovers(path)
 
 
 def test_soft_delete_recovers_from_stale_tmp(spark, tmp_path):
@@ -128,14 +161,15 @@ def test_soft_delete_recovers_from_stale_tmp(spark, tmp_path):
     spark.createDataFrame(
         [(1, 1), (2, 2)], "k long, _sdc_table_version long"
     ).write.parquet(path)
-    stale_tmp = tmp_path / "t__softdel_tmp"
-    stale_tmp.mkdir()
-    (stale_tmp / "junk.txt").write_text("leftover")
+    _stage(path, spark.createDataFrame([(9, 1)], "k long, _sdc_table_version long"))
+    with open(f"{path}/_commit_manifest.json.tmp", "w") as fh:
+        fh.write('{"moves": ["part-')  # a manifest torn before publishing
     n = soft_delete_older_versions(spark, path, active_version=2)
     assert n == 1
     rows = {r.k: r._sdc_deleted_at is not None
             for r in spark.read.parquet(path).collect()}
     assert rows == {1: True, 2: False}
+    assert _no_leftovers(path)
 
 
 def test_upsert_key_moving_across_partitions(spark, tmp_path):
@@ -183,17 +217,27 @@ def test_soft_delete_missing_dataset_is_noop(spark, tmp_path):
 
 
 def test_interrupted_swap_recovers(spark, tmp_path):
-    """A crash between stage-old and rename-new leaves data at
-    `path__old`; the next upsert must restore it, not treat the
-    dataset as missing."""
+    """A crash mid-move (manifest published, one of two staged files
+    moved in) leaves the old and the new row of key 2 visible; the
+    next upsert must finish the commit before it reads, then merge."""
     path = str(tmp_path / "t")
-    spark.createDataFrame([(1, "a"), (2, "b")], "k long, s string").write.parquet(path)
-    import shutil
-    shutil.move(path, path + "__old")  # simulate the crash window
-    updates = spark.createDataFrame([(2, "B")], "k long, s string")
+    spark.createDataFrame([(1, "a"), (2, "b")], "k long, s string").coalesce(
+        1
+    ).write.parquet(path)
+    live = _data_files(path)
+    staged = _stage(
+        path,
+        spark.createDataFrame([(1, "a")], "k long, s string"),
+        spark.createDataFrame([(2, "B")], "k long, s string"),
+    )
+    _publish(path, staged, live)
+    os.rename(f"{path}/_commit_tmp/{staged[0]}", f"{path}/{staged[0]}")
+
+    updates = spark.createDataFrame([(3, "c")], "k long, s string")
     upsert(spark, updates, path, keys=["k"])
-    got = {r.k: r.s for r in spark.read.parquet(path).collect()}
-    assert got == {1: "a", 2: "B"}  # old data recovered, then merged
+    got = sorted((r.k, r.s) for r in spark.read.parquet(path).collect())
+    assert got == [(1, "a"), (2, "B"), (3, "c")]
+    assert _no_leftovers(path)
 
 
 def test_partitioned_bootstrap_writes_partitioned_layout(spark, tmp_path):
@@ -312,22 +356,20 @@ def test_upsert_numeric_string_partition_survives_type_inference(spark, tmp_path
 
 
 def test_pending_deletes_manifest_recovered(spark, tmp_path):
-    """A crash between the deletion manifest and the deletions is
-    healed on the next entry: listed stale partition dirs are removed
-    and the manifest cleared."""
-    from target_hdfs_spark.plans.upsert import recover_dataset
-
+    """A crash after the move-in, before the deletes, is healed on the
+    next entry: the listed files are removed, the partition dir they
+    leave empty goes with them, and the manifest is cleared."""
     path = tmp_path / "t"
     df = spark.createDataFrame(
         [(1, "a", 1.0), (2, "b", 2.0)], "k long, day string, v double"
     )
     df.write.partitionBy("day").parquet(str(path))
-    # simulate: upsert decided day=b is stale, wrote the manifest,
-    # crashed before deleting
-    (path / "__upsert_pending_deletes").write_text("day=b")
-    recover_dataset(spark, str(path))
+    # simulate: a rewrite decided day=b's rows are gone, published its
+    # manifest, crashed before deleting
+    _publish(path, [], [f for f in _data_files(path) if f.startswith("day=b/")])
+    recover(spark, str(path))
     assert not (path / "day=b").exists()
-    assert not (path / "__upsert_pending_deletes").exists()
+    assert _no_leftovers(path)
     assert {r.day for r in spark.read.parquet(str(path)).collect()} == {"a"}
 
 
@@ -352,99 +394,86 @@ def test_soft_delete_preserves_partition_layout(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Round-5: v2 commit-manifest roll-forward (manifest now written BEFORE
-# the partition-swap loop, so every crash point heals by roll-forward)
+# Commit-manifest roll-forward: once the manifest is published, every
+# crash point heals forward, moves before deletes
 # ---------------------------------------------------------------------------
 
 
-def test_v2_manifest_rolls_swaps_forward_before_deleting(spark, tmp_path):
-    """Crash after the manifest write but before ANY swap committed:
-    recovery must first commit the staged partitions from tmp, THEN
-    drop the stale moved-key partition — deleting first would lose the
-    moved key's only surviving copy."""
-    from target_hdfs_spark.plans.upsert import recover_dataset
-
-    path = tmp_path / "t"
+def _moved_key_commit(spark, path) -> None:
+    """Dataset day=a {k1}, day=b {k2}, plus a published commit of a
+    merge that moved k2 to day=a: staged day=a {k1', k2} in two files,
+    every live file to delete."""
     spark.createDataFrame(
         [(1, "a", 1.0), (2, "b", 2.0)], "k long, day string, v double"
     ).write.partitionBy("day").parquet(str(path))
-    # the merge moved k=2 from day=b to day=a; tmp holds the new day=a
-    tmp = tmp_path / "t__upsert_tmp"
-    spark.createDataFrame(
-        [(1, "a", 9.0), (2, "a", 2.0)], "k long, day string, v double"
-    ).write.partitionBy("day").parquet(str(tmp))
-    (path / "__upsert_pending_deletes").write_text(
-        "#upsert-manifest-v2\nS day=a\nD day=b\n#end"
+    live = _data_files(path)
+    staged = _stage(
+        path,
+        spark.createDataFrame([(1, "a", 9.0)], "k long, day string, v double"),
+        spark.createDataFrame([(2, "a", 2.0)], "k long, day string, v double"),
+        partition_col="day",
     )
-    recover_dataset(spark, str(path))
+    _publish(path, staged, live)
+
+
+def _assert_moved_key_committed(spark, path) -> None:
     got = {r.k: (r.day, r.v) for r in spark.read.parquet(str(path)).collect()}
     assert got == {1: ("a", 9.0), 2: ("a", 2.0)}
     assert not (path / "day=b").exists()
-    assert not (path / "__upsert_pending_deletes").exists()
-    assert not tmp.exists()
+    assert _no_leftovers(path)
 
 
-def test_v2_manifest_recovery_after_partial_swap(spark, tmp_path):
-    """Crash MID-swap (old partition staged aside, new not yet renamed
-    in): the partition-swap healer restores the old copy, then the v2
-    roll-forward re-runs the swap from tmp and finishes the plan."""
-    from target_hdfs_spark.plans.upsert import recover_dataset
-
+def test_commit_manifest_rolls_moves_forward_before_deleting(
+    spark, tmp_path, inject_commit_fs
+):
+    """Crash after the manifest was published but before ANY move:
+    recovery must first move the staged files in, THEN delete — the
+    moved key's only other copy is in a file it deletes."""
     path = tmp_path / "t"
-    spark.createDataFrame(
-        [(1, "a", 1.0), (2, "b", 2.0)], "k long, day string, v double"
-    ).write.partitionBy("day").parquet(str(path))
-    tmp = tmp_path / "t__upsert_tmp"
-    spark.createDataFrame(
-        [(1, "a", 9.0), (2, "a", 2.0)], "k long, day string, v double"
-    ).write.partitionBy("day").parquet(str(tmp))
-    # simulate _swap_dirs crashing between its two renames
-    (path / "day=a").rename(path / "day=a__old")
-    (path / "__upsert_pending_deletes").write_text(
-        "#upsert-manifest-v2\nS day=a\nD day=b\n#end"
-    )
-    recover_dataset(spark, str(path))
-    got = {r.k: (r.day, r.v) for r in spark.read.parquet(str(path)).collect()}
-    assert got == {1: ("a", 9.0), 2: ("a", 2.0)}
-    assert not (path / "day=a__old").exists()
-    assert not (path / "day=b").exists()
+    _moved_key_commit(spark, path)
+    log = inject_commit_fs({})
+    recover(spark, str(path))
+    ops = [op for op, _ in log]
+    assert ops.count("rename") == 2
+    assert ops.index("delete") > max(i for i, op in enumerate(ops) if op == "rename")
+    _assert_moved_key_committed(spark, path)
 
 
-def test_v2_manifest_recovery_after_all_swaps(spark, tmp_path):
-    """Crash after every swap committed (tmp copies renamed away) but
-    before the deletions: S entries are no-ops, D entries execute."""
-    from target_hdfs_spark.plans.upsert import recover_dataset
-
+def test_commit_manifest_recovery_after_partial_move(spark, tmp_path):
+    """Crash MID-move (one staged file in, one still staged): recovery
+    moves the rest and finishes the deletes."""
     path = tmp_path / "t"
-    spark.createDataFrame(
-        [(1, "a", 9.0), (2, "a", 2.0), (2, "b", 2.0)],
-        "k long, day string, v double",
-    ).write.partitionBy("day").parquet(str(path))
-    (tmp_path / "t__upsert_tmp").mkdir()  # drained tmp left behind
-    (path / "__upsert_pending_deletes").write_text(
-        "#upsert-manifest-v2\nS day=a\nD day=b\n#end"
-    )
-    recover_dataset(spark, str(path))
-    got = {r.k: (r.day, r.v) for r in spark.read.parquet(str(path)).collect()}
-    assert got == {1: ("a", 9.0), 2: ("a", 2.0)}
-    assert not (tmp_path / "t__upsert_tmp").exists()
+    _moved_key_commit(spark, path)
+    first = _data_files(path / "_commit_tmp")[0]
+    (path / "_commit_tmp" / first).rename(path / first)
+    recover(spark, str(path))
+    _assert_moved_key_committed(spark, path)
+
+
+def test_commit_manifest_recovery_after_all_moves(spark, tmp_path):
+    """Crash after every move (the staging dir drained) but before the
+    deletes: the moves are no-ops, the deletes execute."""
+    path = tmp_path / "t"
+    _moved_key_commit(spark, path)
+    for rel in _data_files(path / "_commit_tmp"):
+        (path / "_commit_tmp" / rel).rename(path / rel)
+    recover(spark, str(path))
+    _assert_moved_key_committed(spark, path)
 
 
 def test_soft_delete_heals_pending_manifest_first(spark, tmp_path):
-    """ACTIVATE_VERSION finalization running after a crashed
-    partitioned upsert must execute the pending commit plan BEFORE its
-    mergeSchema read — otherwise the stale moved-key partition's rows
-    are rewritten into the new dataset and the duplicates (plus the
-    manifest, deleted along with path__old by the whole-dataset swap)
-    become permanent."""
+    """ACTIVATE_VERSION finalization running after a crashed rewrite
+    must finish the published commit BEFORE its mergeSchema read —
+    otherwise the stale copy's rows are rewritten into the new dataset
+    and the duplicates become permanent."""
     path = tmp_path / "t"
     spark.createDataFrame(
         [(1, "x", 1), (1, "y", 1)],
         "k long, part string, _sdc_table_version long",
     ).write.partitionBy("part").parquet(str(path))
-    # crashed upsert had already committed its swaps; part=y is the
-    # stale moved-key copy awaiting deletion
-    (path / "__upsert_pending_deletes").write_text("#upsert-manifest-v2\nD part=y\n#end")
+    # the crashed rewrite had already moved its files in; part=y holds
+    # the stale moved-key copy awaiting deletion
+    _publish(path, [], [f for f in _data_files(path) if f.startswith("part=y/")])
     n = soft_delete_older_versions(
         spark, str(path), active_version=2, partition_cols=("part",)
     )
@@ -452,31 +481,30 @@ def test_soft_delete_heals_pending_manifest_first(spark, tmp_path):
     rows = spark.read.parquet(str(path)).collect()
     assert len(rows) == 1 and rows[0].part == "x"
     assert rows[0]._sdc_deleted_at is not None
-    assert not (path / "__upsert_pending_deletes").exists()
+    assert _no_leftovers(path)
 
 
-def test_v2_manifest_torn_write_aborts_commit(spark, tmp_path):
-    """A manifest missing the #end terminator is a TORN write: the
-    plan completed before any swap ran, so recovery must discard the
-    aborted commit (manifest + tmp) and leave the dataset untouched —
-    rolling a partial plan forward could apply half the swaps and then
-    delete the tmp holding the other half."""
-    from target_hdfs_spark.plans.upsert import recover_dataset
-
+def test_unpublished_commit_manifest_aborts_commit(spark, tmp_path):
+    """A manifest that was never renamed into place is a torn write:
+    the commit never passed its point of no return, so recovery must
+    discard it and the staging, and leave the dataset untouched —
+    rolling a partial plan forward could move half the staged files."""
     path = tmp_path / "t"
     spark.createDataFrame(
         [(1, "a", 1.0), (2, "b", 2.0)], "k long, day string, v double"
     ).write.partitionBy("day").parquet(str(path))
-    tmp = tmp_path / "t__upsert_tmp"
-    spark.createDataFrame(
-        [(1, "a", 9.0), (2, "a", 2.0)], "k long, day string, v double"
-    ).write.partitionBy("day").parquet(str(tmp))
-    # torn: the 'D day=b' line (and terminator) never hit disk
-    (path / "__upsert_pending_deletes").write_text(
-        "#upsert-manifest-v2\nS day=a"
+    staged = _stage(
+        path,
+        spark.createDataFrame(
+            [(1, "a", 9.0), (2, "a", 2.0)], "k long, day string, v double"
+        ),
+        partition_col="day",
     )
-    recover_dataset(spark, str(path))
+    # torn: the write stopped mid-list and the rename never happened
+    (path / "_commit_manifest.json.tmp").write_text(
+        json.dumps({"moves": staged, "deletes": []})[:20]
+    )
+    recover(spark, str(path))
     got = {r.k: (r.day, r.v) for r in spark.read.parquet(str(path)).collect()}
     assert got == {1: ("a", 1.0), 2: ("b", 2.0)}  # pre-upsert state intact
-    assert not (path / "__upsert_pending_deletes").exists()
-    assert not tmp.exists()
+    assert _no_leftovers(path)
