@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from target_hdfs_spark.config import TargetConfig
+from target_hdfs_spark.plans.commit import hadoop_fs
 
 DEFAULT_BLOCK_SIZE = 128 * 1024 * 1024
 BLOCK_FILL_FACTOR = 0.85  # reference: target_hdfs/utils/hdfs.py:100
@@ -106,24 +107,21 @@ def existing_schema(
 ) -> T.StructType | None:
     """Schema of the dataset already at `path`, or None if absent.
 
-    Only genuinely-absent datasets map to None (path missing, or an
-    empty directory with nothing to infer from). Any other read failure
+    Only genuinely-absent datasets map to None: the path is missing
+    (an FS `exists`, ~2 ms, not a failed Spark read), or it is an
+    empty directory with nothing to infer from. Any other read failure
     propagates: swallowing a transient FS error here would silently
     disable the schema-drift guard and append anyway.
     """
     from pyspark.errors import AnalysisException
 
+    fs, jpath, _ = hadoop_fs(spark, path)
+    if not fs.exists(jpath):
+        return None
     try:
         return spark.read.format(fmt).load(path).schema
     except AnalysisException as e:
-        get_class = getattr(e, "getErrorClass", None)
-        klass = (get_class() if get_class else None) or ""
-        msg = str(e)
-        if (
-            klass in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-            or "PATH_NOT_FOUND" in msg
-            or "UNABLE_TO_INFER_SCHEMA" in msg
-        ):
+        if e.getCondition() == "UNABLE_TO_INFER_SCHEMA":
             return None
         raise
 
@@ -226,12 +224,20 @@ def write_stream(
     config: TargetConfig,
     mode: str = "append",
     rows_per_file: int | None = None,
+    checked_schema: T.StructType | None = None,
 ) -> None:
     """The engine's single write path (R12/R13/R15/R26/R27).
 
     `skip_existing_files=True` (R26) bypasses the drift guard and
     always lays down new files — the same opt-out the reference wires
     through `HDFSSink.__init__` (reference: target_hdfs/sinks.py:30,38).
+
+    `checked_schema` is a schema the caller has already checked
+    against `path` and written there itself. When `df.schema` equals
+    it the drift guard is skipped, so a long-lived writer reads the
+    on-disk schema once per dataset, as the reference checks it once
+    when a sink opens (reference: target_hdfs/utils/hdfs.py:108-116).
+    Left at None, every call checks.
 
     `config.table_format` selects the sink format: parquet is native;
     delta/iceberg go through the same `DataFrameWriter` seam and fail
@@ -240,7 +246,7 @@ def write_stream(
     not a silent ClassNotFoundException.
     """
     require_table_format(spark, config.table_format)
-    if not config.skip_existing_files:
+    if not config.skip_existing_files and df.schema != checked_schema:
         enforce_schema_unchanged(
             spark,
             df,

@@ -5,7 +5,8 @@ This is the reference's entire runtime re-expressed (SURVEY.md §3.1):
 
     SCHEMA   -> register stream (JSON Schema -> StructType)
     RECORD   -> validate/coerce, buffer; flush at max_batch_size
-    STATE    -> flush everything, then emit the state line
+    STATE    -> flush every stream (concurrently, one task per
+                destination path), then emit the state line
                 (at-least-once: state only after durable writes,
                 reference semantics R28)
     ACTIVATE_VERSION -> record version (stamped when metadata is on)
@@ -19,6 +20,9 @@ Two ingest paths share every transform and the writer:
   per-row pickling, as the reference buffers PyArrow tables — then
   writes it from a single partition: a flush holds at most
   max_batch_size rows, the file row limit, so it lands as one file.
+  The schema-drift guard reads a path's on-disk schema on its first
+  flush in a run and again after a SCHEMA change, not on every flush,
+  as the reference checks it once when a sink opens.
 - `ingest_jsonl_dir` — the 100 TB path: records already staged as
   JSONL files are read with `spark.read.json(schema=...)` so parsing,
   validation and writing all run distributed; the driver never sees a
@@ -32,9 +36,11 @@ import json
 import re
 import sys
 from collections.abc import Iterable, Iterator
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 import pyarrow as pa
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -169,6 +175,10 @@ class SingerPipe:
         self._dropped_streams: set[str] = set()
         self._dlq: list[tuple[str, str, str]] = []
         self._dlq_layout_checked = False
+        # per stream path, the schema this run has checked against the
+        # data on disk and then written there: a flush with the same
+        # schema skips the drift guard's disk read (see write_stream)
+        self._written_schemas: dict[str, T.StructType] = {}
         # dry_run: full demux + validation + batching, NO writes —
         # the pre-flight a pipeline runs against a new tap before
         # letting it touch the destination. process_lines still
@@ -341,8 +351,41 @@ class SingerPipe:
     # -- flush path --------------------------------------------------------
 
     def flush_all(self) -> None:
-        for name in list(self.streams):
-            self._flush(name)
+        """Write every stream's buffered rows, then the DLQ.
+
+        Streams are written concurrently, one pool task per
+        destination path, on at most `defaultParallelism` threads; a
+        lone path is written inline. Streams that `__alias__` routes
+        to one path share a task and are written one after another:
+        two FileOutputCommitter jobs must not share one `_temporary`.
+        Each task inherits the caller's local properties (job group,
+        scheduler pool). Every task is waited for; then the failure of
+        the earliest stream, if any, is raised. So a STATE is yielded
+        only after all of its streams are durable (R28)."""
+        groups: dict[str, list[int]] = {}
+        names = list(self.streams)
+        for i, name in enumerate(names):
+            if self.streams[name].records:
+                groups.setdefault(self.config.stream_path(name), []).append(i)
+
+        def flush_group(indices: list[int]) -> tuple[int, Exception] | None:
+            for i in indices:
+                try:
+                    self._flush(names[i])
+                except Exception as e:  # re-raised below, after every task
+                    return i, e
+            return None
+
+        workers = min(len(groups), self.spark.sparkContext.defaultParallelism)
+        if workers <= 1:
+            outcomes = [flush_group(g) for g in groups.values()]
+        else:
+            task = inheritable_thread_target(self.spark)(flush_group)
+            with ThreadPoolExecutor(workers) as pool:
+                outcomes = list(pool.map(task, groups.values()))
+        failures = [o for o in outcomes if o]
+        if failures:
+            raise min(failures, key=lambda o: o[0])[1]
         self._flush_dlq()
 
     def _flush_dlq(self) -> None:
@@ -420,13 +463,16 @@ class SingerPipe:
             df = df.withColumn(
                 "_sdc_table_version", F.lit(buf.version).cast("bigint")
             )
+        path = self.config.stream_path(name)
         write_stream(
             self.spark,
             df,
-            self.config.stream_path(name),
+            path,
             self.config,
             rows_per_file=max(self.config.max_batch_size, 1),
+            checked_schema=self._written_schemas.get(path),
         )
+        self._written_schemas[path] = df.schema
         buf.rows_written += len(buf.records)
         buf.files_flushed += 1
         buf.records.clear()

@@ -7,6 +7,8 @@ record validation, batching."""
 from __future__ import annotations
 
 import json
+import sys
+import threading
 
 import pytest
 
@@ -59,20 +61,169 @@ def test_end_to_end_two_streams_with_state(spark, tmp_path):
 
 
 def test_state_only_after_flush(spark, tmp_path):
-    """STATE must not be emitted before preceding records are durable."""
+    """STATE must not be emitted before preceding records are durable,
+    in every stream the STATE covers (they flush concurrently)."""
     config = TargetConfig(destination_path=str(tmp_path))
     pipe = SingerPipe(spark, config)
 
     lines = [
         _schema_msg("s", {"id": {"type": "integer"}}),
+        _schema_msg("t", {"id": {"type": "integer"}}),
         _rec("s", id=1),
+        _rec("t", id=2),
+        _rec("t", id=3),
         json.dumps({"type": "STATE", "value": {"n": 1}}),
     ]
     gen = pipe.process_lines(lines)
     state = next(gen)
-    # at the moment the state line is yielded, the record is on disk
+    # at the moment the state line is yielded, the records are on disk
     assert spark.read.parquet(str(tmp_path / "s")).count() == 1
+    assert spark.read.parquet(str(tmp_path / "t")).count() == 2
     assert state == '{"n":1}'
+
+
+_STATE = json.dumps({"type": "STATE", "value": {"n": 1}})
+
+
+def test_concurrent_flush_drift_in_one_stream_yields_no_state(spark, tmp_path):
+    """One of two streams meets a different type on disk: the STATE
+    raises SchemaChangedError and is never yielded, and the other
+    stream's flush still runs to completion first."""
+    spark.createDataFrame([("x",)], "id string").write.parquet(str(tmp_path / "bad"))
+    pipe = SingerPipe(spark, TargetConfig(destination_path=str(tmp_path)))
+    states = []
+    with pytest.raises(SchemaChangedError):
+        for state in pipe.process_lines([
+            _schema_msg("good", {"id": {"type": "integer"}}),
+            _schema_msg("bad", {"id": {"type": "integer"}}),
+            _rec("good", id=1),
+            _rec("bad", id=2),
+            _STATE,
+        ]):
+            states.append(state)
+    assert states == []
+    assert spark.read.parquet(str(tmp_path / "good")).count() == 1
+    assert spark.read.parquet(str(tmp_path / "bad")).count() == 1
+
+
+def test_aliased_streams_share_a_path_and_flush_in_turn(spark, tmp_path):
+    """Streams `__alias__`-routed to one sink flush at a STATE one
+    after another: every row lands, one file per flush, and no
+    committer `_temporary` is left behind."""
+    names = ("a", "b", "c", "d")
+    config = TargetConfig(
+        destination_path=str(tmp_path),
+        stream_maps={n: {"__alias__": "all"} for n in names},
+    )
+    lines = [_schema_msg(n, {"id": {"type": "integer"}}) for n in names]
+    for state in range(2):
+        lines += [_rec(n, id=10 * state + i) for i, n in enumerate(names)]
+        lines.append(_STATE)
+    states = list(SingerPipe(spark, config).process_lines(lines))
+    assert states == ['{"n":1}'] * 2
+    out = tmp_path / "all"
+    got = sorted(r.id for r in spark.read.parquet(str(out)).collect())
+    assert got == [0, 1, 2, 3, 10, 11, 12, 13]
+    assert len(list(out.glob("*.parquet"))) == 8
+    assert not (out / "_temporary").exists()
+
+
+def test_concurrent_flush_jobs_join_caller_job_group(spark, tmp_path):
+    """Flush tasks inherit the caller's job group, and the pool's
+    threads are gone once the run ends."""
+    sc = spark.sparkContext
+    group = f"flush-{tmp_path.name}"
+    threads = threading.active_count()
+    sc.setJobGroup(group, group)
+    try:
+        list(SingerPipe(spark, TargetConfig(destination_path=str(tmp_path)))
+             .process_lines([
+                 _schema_msg("s", {"id": {"type": "integer"}}),
+                 _schema_msg("t", {"id": {"type": "integer"}}),
+                 _rec("s", id=1),
+                 _rec("t", id=2),
+                 _STATE,
+             ]))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    # the main thread runs no job of its own here: every job in the
+    # group is a write from a pool thread, one at least per stream
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 2
+    assert threading.active_count() == threads
+
+
+def test_concurrent_flush_many_streams_under_fast_switching(spark, tmp_path, monkeypatch):
+    """More streams than flush threads, with the interpreter switching
+    threads as often as it can: every row of every stream lands, and
+    each path's schema is read from disk once."""
+    from target_hdfs_spark.plans import writer
+
+    reads = []
+    real = writer.existing_schema
+
+    def counting(spark, path, fmt="parquet"):
+        reads.append(path)
+        return real(spark, path, fmt)
+
+    monkeypatch.setattr(writer, "existing_schema", counting)
+    names = [f"s{i}" for i in range(6)]
+    lines = [_schema_msg(n, {"id": {"type": "integer"}}) for n in names]
+    for state in range(2):
+        lines += [_rec(n, id=i + 100 * state) for i, n in enumerate(names)]
+        lines.append(_STATE)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        states = list(SingerPipe(spark, TargetConfig(destination_path=str(tmp_path)))
+                      .process_lines(lines))
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(states) == 2
+    assert sorted(reads) == sorted(str(tmp_path / n) for n in names)
+    got = spark.read.parquet(str(tmp_path / "*")).groupBy().sum("id").collect()[0][0]
+    assert got == sum(2 * i + 100 for i in range(6))
+
+
+def test_schema_change_within_one_run_fails(spark, tmp_path):
+    """The once-per-run drift check still runs again after a SCHEMA
+    change: drift inside one run raises, as across runs."""
+    pipe = SingerPipe(spark, TargetConfig(destination_path=str(tmp_path)))
+    with pytest.raises(SchemaChangedError):
+        list(pipe.process_lines([
+            _schema_msg("s", {"id": {"type": "integer"}}),
+            _rec("s", id=1),
+            _STATE,
+            _schema_msg("s", {"id": {"type": "string"}}),
+            _rec("s", id="x"),
+            _STATE,
+        ]))
+    assert [r.id for r in spark.read.parquet(str(tmp_path / "s")).collect()] == [1]
+
+
+def test_drift_guard_reads_disk_once_per_path(spark, tmp_path, monkeypatch):
+    """Two streams over three STATEs read the on-disk schema twice,
+    once per path, not once per flush."""
+    from target_hdfs_spark.plans import writer
+
+    reads = []
+    real = writer.existing_schema
+
+    def counting(spark, path, fmt="parquet"):
+        reads.append(path)
+        return real(spark, path, fmt)
+
+    monkeypatch.setattr(writer, "existing_schema", counting)
+    lines = [
+        _schema_msg("s", {"id": {"type": "integer"}}),
+        _schema_msg("t", {"id": {"type": "integer"}}),
+    ]
+    for n in range(3):
+        lines += [_rec("s", id=n), _rec("t", id=n), _STATE]
+    pipe = SingerPipe(spark, TargetConfig(destination_path=str(tmp_path)))
+    assert len(list(pipe.process_lines(lines))) == 3
+    assert sorted(reads) == [str(tmp_path / "s"), str(tmp_path / "t")]
+    assert spark.read.parquet(str(tmp_path / "t")).count() == 3
 
 
 def test_schema_drift_fails_loudly(spark, tmp_path):

@@ -193,3 +193,31 @@ def test_orc_additive_evolution_merges_schema(spark, tmp_path):
     got = read_dataset(spark, path, fmt="orc")
     assert set(got.columns) == {"v", "note"}
     assert got.count() == 8
+
+
+def test_existing_schema_absent_empty_and_present(spark, tmp_path):
+    """A missing path and an empty directory have no schema; a written
+    dataset reports its own."""
+    from target_hdfs_spark.plans.writer import existing_schema
+
+    assert existing_schema(spark, str(tmp_path / "missing")) is None
+    (tmp_path / "empty").mkdir()
+    assert existing_schema(spark, str(tmp_path / "empty")) is None
+    spark.range(2).write.parquet(str(tmp_path / "full"))
+    assert existing_schema(spark, str(tmp_path / "full")).fieldNames() == ["id"]
+
+
+def test_checked_schema_skips_guard_only_when_it_matches(spark, tmp_path):
+    """`checked_schema` vouches for one schema only: a frame with any
+    other schema is still checked against disk."""
+    from target_hdfs_spark.plans.writer import SchemaChangedError
+
+    path = str(tmp_path / "s")
+    config = TargetConfig(destination_path=str(tmp_path))
+    v1 = spark.range(2).selectExpr("id AS v")
+    write_stream(spark, v1, path, config, rows_per_file=100)
+    write_stream(spark, v1, path, config, rows_per_file=100, checked_schema=v1.schema)
+    drifted = spark.range(1).selectExpr("CAST(id AS STRING) AS v")
+    with pytest.raises(SchemaChangedError):
+        write_stream(spark, drifted, path, config, rows_per_file=100,
+                     checked_schema=v1.schema)
