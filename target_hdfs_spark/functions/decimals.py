@@ -43,11 +43,6 @@ def to_double(c: Column) -> Column:
     return c.cast("string").cast("double")
 
 
-def to_double_sql(expr: str) -> str:
-    """Oracle-side twin of :func:`to_double`."""
-    return f"CAST(CAST(({expr})AS VARCHAR) AS DOUBLE)"
-
-
 def dsum(col: str | Column) -> Column:
     """Exact decimal sum, returned as double."""
     return to_double(F.sum(dec(col)))

@@ -41,6 +41,7 @@ ABOUT = {
         "add_record_metadata": {"type": "boolean", "default": False},
         "max_batch_size": {"type": "integer", "default": 10000},
         "flattening_max_depth": {"type": ["integer", "null"]},
+        "stream_maps": {"type": ["object", "null"]},
         "target_file_bytes": {"type": ["integer", "string", "null"]},
         "table_format": {
             "type": "string",

@@ -408,47 +408,8 @@ def q61_image_decode_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# L5d: audio feature extraction (windowed byte statistics)
+# L5d: WAV header decode (RIFF/WAVE fmt chunk)
 # ---------------------------------------------------------------------------
-
-
-def extract_audio_features(
-    df: DataFrame, binary_col: str = "audio", window_bytes: int = 256
-) -> DataFrame:
-    """Audio-style feature extraction over opaque payloads: fixed-width
-    windows -> per-window (mean, peak) "amplitude" statistics. A real
-    deployment decodes PCM frames first (codec not installed here —
-    same honest-stub posture as decode_image_meta); the windowing,
-    Arrow batching and (id, window_idx, features) output shape are the
-    production plumbing.
-    """
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("window_idx", T.IntegerType()),
-            T.StructField("mean_amplitude", T.DoubleType()),
-            T.StructField("peak_amplitude", T.IntegerType()),
-        ]
-    )
-
-    def feature_batches(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows: list[tuple[int, int, float, int]] = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf[binary_col]):
-                if blob is None:
-                    continue
-                b = bytes(blob)
-                for idx in range(0, len(b) // window_bytes):
-                    win = b[idx * window_bytes : (idx + 1) * window_bytes]
-                    rows.append((doc_id, idx, sum(win) / len(win), max(win)))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "window_idx", "mean_amplitude", "peak_amplitude"],
-            )
-
-    return df.mapInPandas(feature_batches, out_schema)
 
 
 @query(

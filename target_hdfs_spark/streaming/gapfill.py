@@ -26,18 +26,18 @@ correctly-rounded double of the same rational.
 Scale: state is three int64s per key; each trigger's work is O(batch)
 plus the emitted gap rows — the same output cardinality the batch
 scaffold produces. A key silent for a year emits its gap rows only
-when it next speaks; unbounded-idle keys compose with the event-time
-TTL pattern from streaming/neardup.py.
+when it next speaks. The densifier runs on the keyed-state scaffold
+of streaming/stateful.py (``keyed_state_stream``) without a TTL:
+evicting an idle key would drop its open hour before it closes.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from target_hdfs_spark.streaming.stateful import keyed_state_stream
 
 HOUR_US = 3_600_000_000
 
@@ -65,43 +65,33 @@ def _scaled(value: float) -> int:
     return int(round(value * 10_000))
 
 
-def _fill_group(
-    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterable[pd.DataFrame]:
-    if state.exists:
-        open_hour, n_ev, sum_sc = state.get
-    else:
-        open_hour, n_ev, sum_sc = None, 0, 0
+def _fill_step(
+    key: tuple, rows: pd.DataFrame, prior: tuple | None
+) -> tuple[list[tuple], tuple]:
+    open_hour, n_ev, sum_sc = prior if prior is not None else (None, 0, 0)
     out: list[tuple] = []
-    whole = pd.concat(list(pdfs), ignore_index=True)
-    for pdf in (whole.sort_values(["ts", "event_id"]),):
-        for ts, value in zip(pdf["ts"], pdf["value"]):
-            hour = (int(ts.value) // 1000 // HOUR_US) * HOUR_US  # ns -> µs
-            if open_hour is None:
-                open_hour, n_ev, sum_sc = hour, 0, 0
-            elif hour > open_hour:
-                # close the open hour, zero-fill the silence, reopen
-                out.append((key[0], open_hour, n_ev, sum_sc / 10_000.0))
-                gap = open_hour + HOUR_US
-                while gap < hour:
-                    out.append((key[0], gap, 0, 0.0))
-                    gap += HOUR_US
-                open_hour, n_ev, sum_sc = hour, 0, 0
-            # hour < open_hour would be out-of-order input (contract:
-            # event-time ordered per key); fold into the open hour
-            n_ev += 1
-            sum_sc += _scaled(float(value))
-    state.update((open_hour, n_ev, sum_sc))
-    yield pd.DataFrame(out, columns=[f.name for f in OUTPUT_SCHEMA.fields])
+    for ts, value in zip(rows["ts"], rows["value"]):
+        hour = (int(ts.value) // 1000 // HOUR_US) * HOUR_US  # ns -> µs
+        if open_hour is None:
+            open_hour, n_ev, sum_sc = hour, 0, 0
+        elif hour > open_hour:
+            # close the open hour, zero-fill the silence, reopen
+            out.append((key[0], open_hour, n_ev, sum_sc / 10_000.0))
+            gap = open_hour + HOUR_US
+            while gap < hour:
+                out.append((key[0], gap, 0, 0.0))
+                gap += HOUR_US
+            open_hour, n_ev, sum_sc = hour, 0, 0
+        # hour < open_hour would be out-of-order input (contract:
+        # event-time ordered per key); fold into the open hour
+        n_ev += 1
+        sum_sc += _scaled(float(value))
+    return out, (open_hour, n_ev, sum_sc)
 
 
 def stream_hourly_gapfill(events: DataFrame) -> DataFrame:
     """Start the densifier on a streaming frame with
     (user_id, event_id, ts, value)."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _fill_group,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_state_stream(
+        events, "user_id", _fill_step, OUTPUT_SCHEMA, STATE_SCHEMA
     )

@@ -1,32 +1,128 @@
 """Custom stateful streaming operators via applyInPandasWithState
 (SURVEY §2B.3 — "applyInPandasWithState for custom stateful
-operators"): logic that windowed aggregation can't express because
-the state transition is arbitrary Python over Arrow batches.
+operators"): per-key logic that windowed aggregation can't express
+because the state transition is arbitrary Python over Arrow batches.
+Each operator is the streaming twin of a batch query (tests/
+test_stateful.py pins the parity), from the running z-score detector
+and the pattern/funnel trackers to the sketch and curation ledgers.
 
-Operator here: a per-key running anomaly detector. State carries
-(n, sum, sum_sq) of all values seen; each incoming event is scored
-against the mean/std of the state BEFORE it (so scoring is
-order-dependent and genuinely stateful), then folded in. Events whose
-|z-score| exceeds the threshold are emitted.
+One scaffold runs them all, ``keyed_state_stream`` (also used by
+streaming/gapfill.py). A twin supplies only its pure transition
+``step(key, rows, prior) -> (out_rows, new_state)``: ``rows`` is the
+key's micro-batch, concatenated across its Arrow chunks (a group larger
+than the Arrow batch size arrives as several chunks in arbitrary order)
+and sorted by the twin's ``order``; ``prior`` is the stored state
+tuple, or None for a new key; ``out_rows`` are tuples in output-schema
+order. The scaffold owns the rest, and with it the one idle-key TTL
+policy:
 
-Scale: state is three floats per key — millions of keys fit trivially;
-Spark shuffles each micro-batch by key and keeps state in the state
-store (RocksDB-backed on a real cluster). This is the pattern for
-sessionized feature extraction, fraud scoring, and drift detection at
-100 TB/day.
+- ``state_ttl_ms=None`` keeps exact unbounded state: no watermark, no
+  timeout, one state row per ever-seen key;
+- with a TTL the input is watermarked on ``ts`` (``watermark_delay`` is
+  the lateness allowance), timeouts run on event time, and the stored
+  state is the twin's state plus ``last_ms``, the key's latest-ever
+  event time in ms, which ``step`` never sees;
+- after each batch the timer re-arms at ``last_ms + ttl`` with
+  ``last_ms = max(stored last_ms, batch max)``: arming from the batch
+  max alone would REWIND the timer on an all-out-of-order batch;
+- once the watermark passes the timer the key's state is removed and
+  an empty frame is emitted, so the key's next event starts from fresh
+  state. Eviction depends on event time only, so it replays
+  deterministically, and state stays bounded by the ACTIVE key
+  population. What eviction means for each twin is in its docstring.
+
+Scale: state is a few bytes to a few KB per key; Spark shuffles each
+micro-batch by key and keeps state in the state store (RocksDB-backed
+on a real cluster).
 """
 
 from __future__ import annotations
 
 import hashlib
 import math
-from collections.abc import Iterable
+from collections.abc import Callable, Iterable
+from functools import partial
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+# step(key, rows, prior) -> (out_rows, new_state); see the module docstring
+Step = Callable[[tuple, pd.DataFrame, tuple | None], tuple[list[tuple], tuple]]
+
+
+def _keyed_group(
+    step: Step,
+    output_schema: T.StructType,
+    ttl_ms: int | None,
+    order: tuple[str, ...],
+) -> Callable[[tuple, Iterable[pd.DataFrame], GroupState], Iterable[pd.DataFrame]]:
+    """The per-group function applyInPandasWithState calls: TTL
+    eviction, state unpacking, concat + sort, and the monotone re-arm
+    around one ``step``."""
+    columns = output_schema.fieldNames()
+    empty = to_arrow_schema(output_schema).empty_table().to_pandas()
+
+    def group(
+        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
+    ) -> Iterable[pd.DataFrame]:
+        if state.hasTimedOut:
+            state.remove()
+            yield empty
+            return
+        prior = state.get if state.exists else None
+        prev_last = 0
+        if ttl_ms is not None and prior is not None:
+            prior, prev_last = prior[:-1], int(prior[-1])
+        rows = pd.concat(list(pdfs), ignore_index=True)
+        if order:
+            rows = rows.sort_values(list(order))
+        out, new_state = step(key, rows, prior)
+        if ttl_ms is None:
+            state.update(new_state)
+        else:
+            last_ms = max(prev_last, int(rows["ts"].max().value // 1_000_000))
+            state.update((*new_state, last_ms))
+            state.setTimeoutTimestamp(last_ms + ttl_ms)
+        yield pd.DataFrame(out, columns=columns) if out else empty
+
+    return group
+
+
+def keyed_state_stream(
+    frame: DataFrame,
+    key: str,
+    step: Step,
+    output_schema: T.StructType,
+    state_schema: T.StructType,
+    *,
+    state_ttl_ms: int | None = None,
+    watermark_delay: str = "0 seconds",
+    order: tuple[str, ...] = ("ts", "event_id"),
+) -> DataFrame:
+    """Group ``frame`` by ``key`` and fold each key's micro-batches
+    through ``step`` with ``state_schema`` carried across batches,
+    under the module's idle-key TTL policy (see the module
+    docstring). ``order=()`` skips the sort, for order-free folds."""
+    if state_ttl_ms is None:
+        src, stored, timeout = frame, state_schema, GroupStateTimeout.NoTimeout
+    else:
+        src = frame.withWatermark("ts", watermark_delay)
+        stored = T.StructType(
+            [*state_schema.fields, T.StructField("last_ms", T.LongType())]
+        )
+        timeout = GroupStateTimeout.EventTimeTimeout
+    return src.groupBy(key).applyInPandasWithState(
+        _keyed_group(step, output_schema, state_ttl_ms, order),
+        outputStructType=output_schema,
+        stateStructType=stored,
+        outputMode="append",
+        timeoutConf=timeout,
+    )
+
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -45,75 +141,27 @@ STATE_SCHEMA = T.StructType(
         T.StructField("total_sq", T.DoubleType()),
     ]
 )
-# TTL mode adds the latest-ever event time (ms) for the monotone re-arm
-STATE_TTL_SCHEMA = T.StructType(
-    [*STATE_SCHEMA.fields, T.StructField("last_ms", T.LongType())]
-)
 
 MIN_PRIOR = 3  # need a few observations before scoring means anything
 
 
-def _score_group(
-    key: tuple,
-    pdfs: Iterable[pd.DataFrame],
-    state: GroupState,
-    threshold: float,
-    ttl_ms: int | None = None,
-) -> Iterable[pd.DataFrame]:
-    empty = pd.DataFrame(
-        {"user_id": [], "event_id": [], "value": [], "zscore": [], "n_prior": []}
-    ).astype(
-        {
-            "user_id": "int64",
-            "event_id": "int64",
-            "value": "float64",
-            "zscore": "float64",
-            "n_prior": "int64",
-        }
-    )
-    if state.hasTimedOut:
-        # idle past the TTL: the user's running statistics evict; a
-        # returning user re-baselines (MIN_PRIOR warm-up applies
-        # again) — stale statistics scoring post-gap behavior would be
-        # worse than a fresh baseline, and state stays bounded by the
-        # ACTIVE key population
-        state.remove()
-        yield empty
-        return
-    if state.exists:
-        stored = state.get
-        n, total, total_sq = stored[0], stored[1], stored[2]
-        prev_last = stored[3] if ttl_ms is not None else 0
-    else:
-        n, total, total_sq, prev_last = 0, 0.0, 0.0, 0
+def _score_step(
+    key: tuple, rows: pd.DataFrame, prior: tuple | None, threshold: float
+) -> tuple[list[tuple], tuple]:
+    n, total, total_sq = prior if prior is not None else (0, 0.0, 0.0)
     out: list[tuple] = []
-    # Groups larger than the Arrow batch size arrive as MULTIPLE
-    # chunks in arbitrary order — concatenate before sorting, or the
-    # fold order (and thus the z-scores) is run-dependent.
-    whole = pd.concat(list(pdfs), ignore_index=True)
-    for pdf in (whole.sort_values(["ts", "event_id"]),):
-        for event_id, value in zip(pdf["event_id"], pdf["value"]):
-            if n >= MIN_PRIOR:
-                mean = total / n
-                var = max(total_sq / n - mean * mean, 0.0)
-                std = math.sqrt(var)
-                z = (value - mean) / std if std > 0 else 0.0
-                if abs(z) >= threshold:
-                    out.append((key[0], int(event_id), float(value), z, n))
-            n += 1
-            total += float(value)
-            total_sq += float(value) * float(value)
-    if ttl_ms is None:
-        state.update((n, total, total_sq))
-    else:
-        last_ms = max(int(prev_last), int(whole["ts"].max().value // 1_000_000))
-        state.update((n, total, total_sq, last_ms))
-        state.setTimeoutTimestamp(last_ms + ttl_ms)
-    yield (
-        pd.DataFrame(out, columns=[f.name for f in OUTPUT_SCHEMA.fields])
-        if out
-        else empty
-    )
+    for event_id, value in zip(rows["event_id"], rows["value"]):
+        if n >= MIN_PRIOR:
+            mean = total / n
+            var = max(total_sq / n - mean * mean, 0.0)
+            std = math.sqrt(var)
+            z = (value - mean) / std if std > 0 else 0.0
+            if abs(z) >= threshold:
+                out.append((key[0], int(event_id), float(value), z, n))
+        n += 1
+        total += float(value)
+        total_sq += float(value) * float(value)
+    return out, (n, total, total_sq)
 
 
 def running_zscore_anomalies(
@@ -130,27 +178,25 @@ def running_zscore_anomalies(
     populations (the pattern/funnel trackers' event-time eviction
     discipline): an idle user's statistics evict once the watermark
     passes their last event + TTL, and a returning user re-baselines
-    through the MIN_PRIOR warm-up. ``None`` keeps unbounded exact
-    behavior (three floats per ever-seen key).
+    through the MIN_PRIOR warm-up: stale statistics scoring post-gap
+    behavior would be worse than a fresh baseline. ``None`` keeps
+    unbounded exact behavior (three floats per ever-seen key).
+
+    State carries (n, sum, sum_sq) of all values seen; each event is
+    scored against the mean/std of the state BEFORE it (so scoring is
+    order-dependent and genuinely stateful), then folded in.
 
     `events` must be a streaming DataFrame with columns
     (user_id, event_id, ts, value).
     """
-
-    def fn(key, pdfs, state):
-        return _score_group(key, pdfs, state, threshold, state_ttl_ms)
-
-    if state_ttl_ms is None:
-        src, schema, timeout = events, STATE_SCHEMA, GroupStateTimeout.NoTimeout
-    else:
-        src = events.withWatermark("ts", watermark_delay)
-        schema, timeout = STATE_TTL_SCHEMA, GroupStateTimeout.EventTimeTimeout
-    return src.groupBy("user_id").applyInPandasWithState(
-        fn,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=schema,
-        outputMode="append",
-        timeoutConf=timeout,
+    return keyed_state_stream(
+        events,
+        "user_id",
+        partial(_score_step, threshold=threshold),
+        OUTPUT_SCHEMA,
+        STATE_SCHEMA,
+        state_ttl_ms=state_ttl_ms,
+        watermark_delay=watermark_delay,
     )
 
 
@@ -179,23 +225,22 @@ PATTERN_STATE_SCHEMA = T.StructType(
 )
 
 
-def _match_group(
-    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterable[pd.DataFrame]:
-    suffix: list[str] = (
-        state.get[0].split(_SUFFIX_SEP) if state.exists and state.get[0] else []
-    )
+def _suffix(prior: tuple | None) -> list[str]:
+    return prior[0].split(_SUFFIX_SEP) if prior is not None and prior[0] else []
+
+
+def _match_step(
+    key: tuple, rows: pd.DataFrame, prior: tuple | None
+) -> tuple[list[tuple], tuple]:
+    suffix = _suffix(prior)
     keep = len(PATTERN) - 1
     out: list[tuple] = []
-    whole = pd.concat(list(pdfs), ignore_index=True)
-    for pdf in (whole.sort_values(["ts", "event_id"]),):
-        for event_id, etype in zip(pdf["event_id"], pdf["event_type"]):
-            window = (*suffix, etype)
-            if tuple(window[-len(PATTERN):]) == PATTERN:
-                out.append((key[0], int(event_id)))
-            suffix = list(window[-keep:])
-    state.update((_SUFFIX_SEP.join(suffix),))
-    yield pd.DataFrame(out, columns=[f.name for f in PATTERN_OUTPUT_SCHEMA.fields])
+    for event_id, etype in zip(rows["event_id"], rows["event_type"]):
+        window = (*suffix, etype)
+        if tuple(window[-len(PATTERN):]) == PATTERN:
+            out.append((key[0], int(event_id)))
+        suffix = list(window[-keep:])
+    return out, (_SUFFIX_SEP.join(suffix),)
 
 
 def consecutive_pattern_stream(events: DataFrame) -> DataFrame:
@@ -215,12 +260,8 @@ def consecutive_pattern_stream(events: DataFrame) -> DataFrame:
     `events` must be a streaming DataFrame with columns
     (user_id, event_id, ts, event_type).
     """
-    return events.groupBy("user_id").applyInPandasWithState(
-        _match_group,
-        outputStructType=PATTERN_OUTPUT_SCHEMA,
-        stateStructType=PATTERN_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_state_stream(
+        events, "user_id", _match_step, PATTERN_OUTPUT_SCHEMA, PATTERN_STATE_SCHEMA
     )
 
 
@@ -248,61 +289,19 @@ MULTI_OUTPUT_SCHEMA = T.StructType(
 )
 
 
-# TTL-mode state: the suffix plus the key's latest-ever event time
-# (ms), needed for the monotone timeout re-arm (the neardup
-# convention: arming from the batch max alone could REWIND the timer
-# on an all-out-of-order batch)
-MULTI_STATE_TTL_SCHEMA = T.StructType(
-    [
-        T.StructField("suffix", T.StringType()),
-        T.StructField("last_ms", T.LongType()),
-    ]
-)
-
-
-def _multi_match_group(
-    key: tuple,
-    pdfs: Iterable[pd.DataFrame],
-    state: GroupState,
-    ttl_ms: int | None = None,
-) -> Iterable[pd.DataFrame]:
-    empty = pd.DataFrame({"user_id": [], "pattern": [], "last_event_id": []}).astype(
-        {"user_id": "int64", "pattern": "object", "last_event_id": "int64"}
-    )
-    if state.hasTimedOut:
-        # watermark passed last-activity + TTL: the idle user's suffix
-        # evicts; their next event starts with clean context (a run
-        # straddling a gap longer than the TTL is deliberately lost)
-        state.remove()
-        yield empty
-        return
-    if state.exists:
-        stored = state.get
-        suffix = stored[0].split(_SUFFIX_SEP) if stored[0] else []
-        prev_last = stored[1] if ttl_ms is not None else 0
-    else:
-        suffix, prev_last = [], 0
+def _multi_match_step(
+    key: tuple, rows: pd.DataFrame, prior: tuple | None
+) -> tuple[list[tuple], tuple]:
+    suffix = _suffix(prior)
     keep = max(len(p) for p in MULTI_PATTERNS.values()) - 1
     out: list[tuple] = []
-    whole = pd.concat(list(pdfs), ignore_index=True)
-    for pdf in (whole.sort_values(["ts", "event_id"]),):
-        for event_id, etype in zip(pdf["event_id"], pdf["event_type"]):
-            window = (*suffix, etype)
-            for name, pat in MULTI_PATTERNS.items():
-                if tuple(window[-len(pat):]) == pat:
-                    out.append((key[0], name, int(event_id)))
-            suffix = list(window[-keep:])
-    if ttl_ms is None:
-        state.update((_SUFFIX_SEP.join(suffix),))
-    else:
-        last_ms = max(int(prev_last), int(whole["ts"].max().value // 1_000_000))
-        state.update((_SUFFIX_SEP.join(suffix), last_ms))
-        state.setTimeoutTimestamp(last_ms + ttl_ms)
-    yield (
-        pd.DataFrame(out, columns=[f.name for f in MULTI_OUTPUT_SCHEMA.fields])
-        if out
-        else empty
-    )
+    for event_id, etype in zip(rows["event_id"], rows["event_type"]):
+        window = (*suffix, etype)
+        for name, pat in MULTI_PATTERNS.items():
+            if tuple(window[-len(pat):]) == pat:
+                out.append((key[0], name, int(event_id)))
+        suffix = list(window[-keep:])
+    return out, (_SUFFIX_SEP.join(suffix),)
 
 
 def multi_pattern_stream(
@@ -326,29 +325,22 @@ def multi_pattern_stream(
     ``state_ttl_ms`` bounds the state store on unbounded streams with
     churning key populations: an idle user's suffix evicts once the
     event-time watermark (``watermark_delay`` lateness allowance)
-    passes their last event + TTL — the neardup operator's eviction
-    discipline (replay-deterministic, monotone re-arm). ``None``
-    keeps exact unbounded behavior; state is then O(len patterns)
-    bytes per ever-seen key.
+    passes their last event + TTL, and their next event starts with
+    clean context: a run straddling a gap longer than the TTL is
+    deliberately lost. ``None`` keeps exact unbounded behavior; state
+    is then O(len patterns) bytes per ever-seen key.
 
     `events` must be a streaming DataFrame with columns
     (user_id, event_id, ts, event_type).
     """
-
-    def fn(key, pdfs, state):
-        return _multi_match_group(key, pdfs, state, state_ttl_ms)
-
-    if state_ttl_ms is None:
-        src, schema, timeout = events, PATTERN_STATE_SCHEMA, GroupStateTimeout.NoTimeout
-    else:
-        src = events.withWatermark("ts", watermark_delay)
-        schema, timeout = MULTI_STATE_TTL_SCHEMA, GroupStateTimeout.EventTimeTimeout
-    return src.groupBy("user_id").applyInPandasWithState(
-        fn,
-        outputStructType=MULTI_OUTPUT_SCHEMA,
-        stateStructType=schema,
-        outputMode="append",
-        timeoutConf=timeout,
+    return keyed_state_stream(
+        events,
+        "user_id",
+        _multi_match_step,
+        MULTI_OUTPUT_SCHEMA,
+        PATTERN_STATE_SCHEMA,
+        state_ttl_ms=state_ttl_ms,
+        watermark_delay=watermark_delay,
     )
 
 
@@ -385,10 +377,6 @@ FUNNEL_STATE_SCHEMA = T.StructType(
         T.StructField(f"c{i}_us", T.ArrayType(T.LongType()))
         for i in range(len(FUNNEL_STAGES))
     ]
-)
-# TTL mode adds the latest-ever event time (ms) for the monotone re-arm
-FUNNEL_STATE_TTL_SCHEMA = T.StructType(
-    [*FUNNEL_STATE_SCHEMA.fields, T.StructField("last_ms", T.LongType())]
 )
 
 
@@ -458,45 +446,21 @@ def _funnel_prune(
     return out
 
 
-def _funnel_group(
+def _funnel_step(
     key: tuple,
-    pdfs: Iterable[pd.DataFrame],
-    state: GroupState,
-    ttl_ms: int | None = None,
+    rows: pd.DataFrame,
+    prior: tuple | None,
     max_pending: int | None = None,
-) -> Iterable[pd.DataFrame]:
-    empty = pd.DataFrame(
-        {"user_id": [], "stage": [], "stage_ts_us": [], "since_view_us": []}
-    ).astype(
-        {
-            "user_id": "int64",
-            "stage": "object",
-            "stage_ts_us": "int64",
-            "since_view_us": "object",
-        }
-    )
-    if state.hasTimedOut:
-        # idle past the TTL: the abandoned funnel's progress evicts;
-        # a later return starts a fresh funnel (attribution-window
-        # semantics — conversions are only credited within the TTL)
-        state.remove()
-        yield empty
-        return
+) -> tuple[list[tuple], tuple]:
     n = len(FUNNEL_STAGES)
-    if state.exists:
-        stored = state.get
-        cands = [list(stored[i]) for i in range(n)]
-        prev_last = stored[n] if ttl_ms is not None else 0
-    else:
-        cands, prev_last = [[] for _ in range(n)], 0
+    cands = [list(c) for c in prior] if prior is not None else [[] for _ in range(n)]
     last = n - 1
     # pre-batch stamps: what the sink already believes for this user
     before = _funnel_chain(cands)
-    whole = pd.concat(list(pdfs), ignore_index=True)
     # datetime64[ns] -> epoch micros (events.ts is micros-backed,
     # so this is exact)
-    ts_us_col = whole["ts"].astype("int64") // 1000
-    for ts_us, etype in zip(ts_us_col, whole["event_type"]):
+    ts_us_col = rows["ts"].astype("int64") // 1000
+    for ts_us, etype in zip(ts_us_col, rows["event_type"]):
         try:
             i = FUNNEL_STAGES.index(etype)
         except ValueError:
@@ -514,18 +478,7 @@ def _funnel_group(
         prev_since = int(before[i] - before[0]) if i == last else None
         if after[i] != before[i] or (i == last and since != prev_since):
             out.append((key[0], FUNNEL_STAGES[i], int(after[i]), since))
-    pruned = _funnel_prune(cands, after, max_pending)
-    if ttl_ms is None:
-        state.update(tuple(pruned))
-    else:
-        last_ms = max(int(prev_last), int(whole["ts"].max().value // 1_000_000))
-        state.update((*pruned, last_ms))
-        state.setTimeoutTimestamp(last_ms + ttl_ms)
-    yield (
-        pd.DataFrame(out, columns=[f.name for f in FUNNEL_OUTPUT_SCHEMA.fields])
-        if out
-        else empty
-    )
+    return out, tuple(_funnel_prune(cands, after, max_pending))
 
 
 def funnel_stage_stream(
@@ -569,30 +522,23 @@ def funnel_stage_stream(
 
     ``state_ttl_ms`` turns the tracker into an attribution-window
     funnel: an idle user's progress evicts once the event-time
-    watermark passes their last event + TTL (monotone re-arm; a later
-    return starts a fresh funnel). ``None`` keeps q138's unbounded
-    semantics — state is then 24 bytes per ever-seen key.
+    watermark passes their last event + TTL, so conversions are only
+    credited within the TTL (a later return starts a fresh funnel).
+    ``None`` keeps q138's unbounded semantics — state is then 24
+    bytes per ever-seen key.
 
     `events` must be a streaming DataFrame with columns
     (user_id, event_id, ts, event_type).
     """
-
-    def fn(key, pdfs, state):
-        return _funnel_group(
-            key, pdfs, state, state_ttl_ms, max_pending_candidates
-        )
-
-    if state_ttl_ms is None:
-        src, schema, timeout = events, FUNNEL_STATE_SCHEMA, GroupStateTimeout.NoTimeout
-    else:
-        src = events.withWatermark("ts", watermark_delay)
-        schema, timeout = FUNNEL_STATE_TTL_SCHEMA, GroupStateTimeout.EventTimeTimeout
-    return src.groupBy("user_id").applyInPandasWithState(
-        fn,
-        outputStructType=FUNNEL_OUTPUT_SCHEMA,
-        stateStructType=schema,
-        outputMode="append",
-        timeoutConf=timeout,
+    return keyed_state_stream(
+        events,
+        "user_id",
+        partial(_funnel_step, max_pending=max_pending_candidates),
+        FUNNEL_OUTPUT_SCHEMA,
+        FUNNEL_STATE_SCHEMA,
+        state_ttl_ms=state_ttl_ms,
+        watermark_delay=watermark_delay,
+        order=(),  # the candidate sets are order-free
     )
 
 
@@ -621,36 +567,29 @@ SCD2_STATE_SCHEMA = T.StructType(
 )
 
 
-def _scd2_group(
-    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterable[pd.DataFrame]:
-    open_type, open_value, open_from = (
-        state.get if state.exists else (None, None, -1)
-    )
+def _scd2_step(
+    key: tuple, rows: pd.DataFrame, prior: tuple | None
+) -> tuple[list[tuple], tuple]:
+    open_type, open_value, open_from = prior if prior is not None else (None, None, -1)
     out: list[tuple] = []
-    whole = pd.concat(list(pdfs), ignore_index=True)
     # Null event_type rows are SKIPPED, documented divergence from the
     # batch twin: q105's SQL pushes a mid-stream NULL through lag()
     # three-valued logic (the NULL row opens nothing but breaks the
     # chain for its successor) — an artifact, not a semantic anyone
     # wants; str(None) coercion would be worse (a "None" string type
     # that merges with genuine NULLs). Filter or impute upstream.
-    whole = whole[whole["event_type"].notna()]
-    for pdf in (whole.sort_values(["ts", "event_id"]),):
-        ts_us_col = pdf["ts"].astype("int64") // 1000
-        for ts_us, etype, value in zip(
-            ts_us_col, pdf["event_type"], pdf["value"]
-        ):
-            if open_from != -1 and etype == open_type:
-                continue  # same type: interval stays open
-            if open_from != -1:
-                # type changed: the open interval CLOSES at this event
-                out.append(
-                    (key[0], open_type, float(open_value), int(open_from), int(ts_us))
-                )
-            open_type, open_value, open_from = str(etype), float(value), int(ts_us)
-    state.update((open_type, open_value, open_from))
-    yield pd.DataFrame(out, columns=[f.name for f in SCD2_OUTPUT_SCHEMA.fields])
+    rows = rows[rows["event_type"].notna()]
+    ts_us_col = rows["ts"].astype("int64") // 1000
+    for ts_us, etype, value in zip(ts_us_col, rows["event_type"], rows["value"]):
+        if open_from != -1 and etype == open_type:
+            continue  # same type: interval stays open
+        if open_from != -1:
+            # type changed: the open interval CLOSES at this event
+            out.append(
+                (key[0], open_type, float(open_value), int(open_from), int(ts_us))
+            )
+        open_type, open_value, open_from = str(etype), float(value), int(ts_us)
+    return out, (open_type, open_value, open_from)
 
 
 def scd2_interval_stream(events: DataFrame) -> DataFrame:
@@ -676,12 +615,8 @@ def scd2_interval_stream(events: DataFrame) -> DataFrame:
     `events` must be a streaming DataFrame with columns
     (user_id, event_id, ts, event_type, value).
     """
-    return events.groupBy("user_id").applyInPandasWithState(
-        _scd2_group,
-        outputStructType=SCD2_OUTPUT_SCHEMA,
-        stateStructType=SCD2_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_state_stream(
+        events, "user_id", _scd2_step, SCD2_OUTPUT_SCHEMA, SCD2_STATE_SCHEMA
     )
 
 
@@ -850,9 +785,6 @@ GAP_STATE_SCHEMA = T.StructType(
         T.StructField("suffix_ids", T.StringType()),
     ]
 )
-GAP_STATE_TTL_SCHEMA = T.StructType(
-    [*GAP_STATE_SCHEMA.fields, T.StructField("last_ms", T.LongType())]
-)
 
 
 def _gap_completions(
@@ -909,69 +841,26 @@ def _gap_completions(
     return out
 
 
-def _gap_match_group(
+def _gap_match_step(
     key: tuple,
-    pdfs: Iterable[pd.DataFrame],
-    state: GroupState,
-    ttl_ms: int | None = None,
+    rows: pd.DataFrame,
+    prior: tuple | None,
     patterns: dict[str, dict] | None = None,
-) -> Iterable[pd.DataFrame]:
+) -> tuple[list[tuple], tuple]:
     patterns = patterns or GAP_PATTERNS
     keep = _gap_keep(patterns)
-    empty = pd.DataFrame(
-        {
-            "user_id": [],
-            "pattern": [],
-            "first_event_id": [],
-            "last_event_id": [],
-            "span": [],
-        }
-    ).astype(
-        {
-            "user_id": "int64",
-            "pattern": "object",
-            "first_event_id": "int64",
-            "last_event_id": "int64",
-            "span": "int32",
-        }
-    )
-    if state.hasTimedOut:
-        state.remove()
-        yield empty
-        return
-    if state.exists:
-        stored = state.get
-        types = stored[0].split(_SUFFIX_SEP) if stored[0] else []
-        ids = [int(x) for x in stored[1].split(_SUFFIX_SEP)] if stored[1] else []
-        prev_last = stored[2] if ttl_ms is not None else 0
-    else:
-        types, ids, prev_last = [], [], 0
-    suffix = list(zip(types, ids))
+    types = _suffix(prior)
+    ids = prior[1].split(_SUFFIX_SEP) if prior is not None and prior[1] else []
+    suffix = list(zip(types, (int(x) for x in ids)))
     out: list[tuple] = []
-    whole = pd.concat(list(pdfs), ignore_index=True)
-    for pdf in (whole.sort_values(["ts", "event_id"]),):
-        for event_id, etype in zip(pdf["event_id"], pdf["event_type"]):
-            window = [*suffix, (str(etype), int(event_id))]
-            for name, first_id, last_id, span in _gap_completions(
-                window, patterns
-            ):
-                out.append((key[0], name, first_id, last_id, span))
-            suffix = window[-keep:]
+    for event_id, etype in zip(rows["event_id"], rows["event_type"]):
+        window = [*suffix, (str(etype), int(event_id))]
+        for name, first_id, last_id, span in _gap_completions(window, patterns):
+            out.append((key[0], name, first_id, last_id, span))
+        suffix = window[-keep:]
     types_s = _SUFFIX_SEP.join(t for t, _ in suffix)
     ids_s = _SUFFIX_SEP.join(str(i) for _, i in suffix)
-    if ttl_ms is None:
-        state.update((types_s, ids_s))
-    else:
-        last_ms = max(int(prev_last), int(whole["ts"].max().value // 1_000_000))
-        state.update((types_s, ids_s, last_ms))
-        state.setTimeoutTimestamp(last_ms + ttl_ms)
-    yield (
-        pd.DataFrame(out, columns=[f.name for f in GAP_OUTPUT_SCHEMA.fields]).astype(
-            {"span": "int32"}
-        )
-        if out
-        else empty
-    )
+    return out, (types_s, ids_s)
 
 
 def gapped_pattern_stream(
@@ -995,30 +884,23 @@ def gapped_pattern_stream(
     Semantics (batch-defined by q162_gapped_pattern_match's oracle):
     skip-to-next-row overlap, earliest completion per start row.
 
-    ``state_ttl_ms``: same event-time eviction discipline as
-    multi_pattern_stream (monotone re-arm; an idle user's suffix
-    evicts once the watermark passes last event + TTL). ``None``
-    keeps exact unbounded behavior; state is O(max within) tokens
-    per ever-seen key.
+    ``state_ttl_ms``: same event-time eviction as
+    multi_pattern_stream (an idle user's suffix evicts once the
+    watermark passes last event + TTL). ``None`` keeps exact
+    unbounded behavior; state is O(max within) tokens per ever-seen
+    key.
 
     `events` must be a streaming DataFrame with columns
     (user_id, event_id, ts, event_type).
     """
-
-    def fn(key, pdfs, state):
-        return _gap_match_group(key, pdfs, state, state_ttl_ms, patterns)
-
-    if state_ttl_ms is None:
-        src, schema, timeout = events, GAP_STATE_SCHEMA, GroupStateTimeout.NoTimeout
-    else:
-        src = events.withWatermark("ts", watermark_delay)
-        schema, timeout = GAP_STATE_TTL_SCHEMA, GroupStateTimeout.EventTimeTimeout
-    return src.groupBy("user_id").applyInPandasWithState(
-        fn,
-        outputStructType=GAP_OUTPUT_SCHEMA,
-        stateStructType=schema,
-        outputMode="append",
-        timeoutConf=timeout,
+    return keyed_state_stream(
+        events,
+        "user_id",
+        partial(_gap_match_step, patterns=patterns),
+        GAP_OUTPUT_SCHEMA,
+        GAP_STATE_SCHEMA,
+        state_ttl_ms=state_ttl_ms,
+        watermark_delay=watermark_delay,
     )
 
 
@@ -1046,40 +928,19 @@ TWAP_STATE_SCHEMA = T.StructType(
         T.StructField("n_intervals", T.LongType()),
     ]
 )
-TWAP_STATE_TTL_SCHEMA = T.StructType(
-    [*TWAP_STATE_SCHEMA.fields, T.StructField("last_ms", T.LongType())]
-)
 
 
-def _twap_group(
-    key: tuple,
-    pdfs: Iterable[pd.DataFrame],
-    state: GroupState,
-    ttl_ms: int | None = None,
-) -> Iterable[pd.DataFrame]:
-    empty = pd.DataFrame(
-        {"user_id": [], "n_intervals": [], "total_us": [], "twap_cents": []}
-    ).astype("int64")
-    if state.hasTimedOut:
-        # exposure-window semantics: an idle user's OPEN observation
-        # expires — it never accrues weight past the TTL, and the
-        # closed sums evict with it (a later return starts fresh)
-        state.remove()
-        yield empty
-        return
-    if state.exists:
-        stored = state.get
-        last_t, last_v, sum_w, sum_vw, n = (int(x) for x in stored[:5])
-        prev_last = int(stored[5]) if ttl_ms is not None else 0
+def _twap_step(
+    key: tuple, rows: pd.DataFrame, prior: tuple | None
+) -> tuple[list[tuple], tuple]:
+    if prior is not None:
+        last_t, last_v, sum_w, sum_vw, n = (int(x) for x in prior)
     else:
         last_t, last_v, sum_w, sum_vw, n = -1, 0, 0, 0, 0
-        prev_last = 0
-    whole = pd.concat(list(pdfs), ignore_index=True)
-    whole = whole.sort_values(["ts", "event_id"])
     # datetime64[ns] -> epoch micros (events.ts is micros-backed -> exact)
-    t_us = (whole["ts"].astype("int64") // 1000).to_numpy()
+    t_us = (rows["ts"].astype("int64") // 1000).to_numpy()
     # floor(value*100): same dyadic-safe cents convention as batch q174
-    v_cents = np.floor(whole["value"].to_numpy() * 100).astype("int64")
+    v_cents = np.floor(rows["value"].to_numpy() * 100).astype("int64")
     closed = 0
     for t, v in zip(t_us, v_cents):
         t = int(t)
@@ -1090,24 +951,12 @@ def _twap_group(
             n += 1
             closed += 1
         last_t, last_v = t, int(v)
-    if ttl_ms is None:
-        state.update((last_t, last_v, sum_w, sum_vw, n))
-    else:
-        last_ms = max(prev_last, int(whole["ts"].max().value // 1_000_000))
-        state.update((last_t, last_v, sum_w, sum_vw, n, last_ms))
-        state.setTimeoutTimestamp(last_ms + ttl_ms)
+    out = []
     if closed and sum_w > 0:
         # int64 truncated division — identical to q174's `div`
-        yield pd.DataFrame(
-            {
-                "user_id": [int(key[0])],
-                "n_intervals": [n],
-                "total_us": [sum_w],
-                "twap_cents": [sum_vw // sum_w if sum_vw >= 0 else -((-sum_vw) // sum_w)],
-            }
-        ).astype("int64")
-    else:
-        yield empty
+        twap = sum_vw // sum_w if sum_vw >= 0 else -((-sum_vw) // sum_w)
+        out.append((int(key[0]), n, sum_w, twap))
+    return out, (last_t, last_v, sum_w, sum_vw, n)
 
 
 def time_weighted_stream(
@@ -1134,26 +983,21 @@ def time_weighted_stream(
     State is 5 int64s per key (40 bytes): billions of users fit a
     RocksDB store. ``state_ttl_ms`` gives exposure-window semantics —
     an idle user's open observation stops accruing and evicts once the
-    event-time watermark passes last event + TTL (monotone re-arm).
+    event-time watermark passes last event + TTL, so it never accrues
+    weight past the TTL; the closed sums evict with it and a later
+    return starts fresh.
 
     `events` must be a streaming DataFrame with columns
     (user_id, event_id, ts, value).
     """
-
-    def fn(key, pdfs, state):
-        return _twap_group(key, pdfs, state, state_ttl_ms)
-
-    if state_ttl_ms is None:
-        src, schema, timeout = events, TWAP_STATE_SCHEMA, GroupStateTimeout.NoTimeout
-    else:
-        src = events.withWatermark("ts", watermark_delay)
-        schema, timeout = TWAP_STATE_TTL_SCHEMA, GroupStateTimeout.EventTimeTimeout
-    return src.groupBy("user_id").applyInPandasWithState(
-        fn,
-        outputStructType=TWAP_OUTPUT_SCHEMA,
-        stateStructType=schema,
-        outputMode="append",
-        timeoutConf=timeout,
+    return keyed_state_stream(
+        events,
+        "user_id",
+        _twap_step,
+        TWAP_OUTPUT_SCHEMA,
+        TWAP_STATE_SCHEMA,
+        state_ttl_ms=state_ttl_ms,
+        watermark_delay=watermark_delay,
     )
 
 
@@ -1172,53 +1016,21 @@ TRANS_OUTPUT_SCHEMA = T.StructType(
 
 # the ONE pending observation per key: the last event type seen
 TRANS_STATE_SCHEMA = T.StructType([T.StructField("last_type", T.StringType())])
-TRANS_STATE_TTL_SCHEMA = T.StructType(
-    [*TRANS_STATE_SCHEMA.fields, T.StructField("last_ms", T.LongType())]
-)
 
 
-def _trans_group(
-    key: tuple,
-    pdfs: Iterable[pd.DataFrame],
-    state: GroupState,
-    ttl_ms: int | None = None,
-) -> Iterable[pd.DataFrame]:
-    empty = pd.DataFrame(
-        {"user_id": [], "src": [], "dst": [], "dst_ts_us": []}
-    ).astype({"user_id": "int64", "src": "object", "dst": "object", "dst_ts_us": "int64"})
-    if state.hasTimedOut:
-        # an idle user's dangling last-event evicts: a later return
-        # starts a new chain rather than bridging the idle gap
-        state.remove()
-        yield empty
-        return
-    if state.exists:
-        stored = state.get
-        last = stored[0]
-        prev_last = int(stored[1]) if ttl_ms is not None else 0
-    else:
-        last, prev_last = None, 0
-    whole = pd.concat(list(pdfs), ignore_index=True)
-    whole = whole.sort_values(["ts", "event_id"])
-    ts_us_col = whole["ts"].astype("int64") // 1000
+def _trans_step(
+    key: tuple, rows: pd.DataFrame, prior: tuple | None
+) -> tuple[list[tuple], tuple]:
+    last = prior[0] if prior is not None else None
+    ts_us_col = rows["ts"].astype("int64") // 1000
     out: list[tuple] = []
-    for ts_us, etype in zip(ts_us_col, whole["event_type"]):
+    for ts_us, etype in zip(ts_us_col, rows["event_type"]):
         if etype is None:
             continue
         if last is not None:
             out.append((int(key[0]), last, etype, int(ts_us)))
         last = etype
-    if ttl_ms is None:
-        state.update((last,))
-    else:
-        last_ms = max(prev_last, int(whole["ts"].max().value // 1_000_000))
-        state.update((last, last_ms))
-        state.setTimeoutTimestamp(last_ms + ttl_ms)
-    yield (
-        pd.DataFrame(out, columns=["user_id", "src", "dst", "dst_ts_us"])
-        if out
-        else empty
-    )
+    return out, (last,)
 
 
 def transition_stream(
@@ -1245,21 +1057,14 @@ def transition_stream(
     `events` must be a streaming DataFrame with columns
     (user_id, event_id, ts, event_type).
     """
-
-    def fn(key, pdfs, state):
-        return _trans_group(key, pdfs, state, state_ttl_ms)
-
-    if state_ttl_ms is None:
-        src, schema, timeout = events, TRANS_STATE_SCHEMA, GroupStateTimeout.NoTimeout
-    else:
-        src = events.withWatermark("ts", watermark_delay)
-        schema, timeout = TRANS_STATE_TTL_SCHEMA, GroupStateTimeout.EventTimeTimeout
-    return src.groupBy("user_id").applyInPandasWithState(
-        fn,
-        outputStructType=TRANS_OUTPUT_SCHEMA,
-        stateStructType=schema,
-        outputMode="append",
-        timeoutConf=timeout,
+    return keyed_state_stream(
+        events,
+        "user_id",
+        _trans_step,
+        TRANS_OUTPUT_SCHEMA,
+        TRANS_STATE_SCHEMA,
+        state_ttl_ms=state_ttl_ms,
+        watermark_delay=watermark_delay,
     )
 
 
@@ -1282,53 +1087,20 @@ EMA_STATE_SCHEMA = T.StructType(
         T.StructField("n_events", T.LongType()),
     ]
 )
-EMA_STATE_TTL_SCHEMA = T.StructType(
-    [*EMA_STATE_SCHEMA.fields, T.StructField("last_ms", T.LongType())]
-)
 
 
-def _ema_group(
-    key: tuple,
-    pdfs: Iterable[pd.DataFrame],
-    state: GroupState,
-    ttl_ms: int | None = None,
-) -> Iterable[pd.DataFrame]:
-    empty = pd.DataFrame(
-        {"user_id": [], "n_events": [], "ema_micro": []}
-    ).astype("int64")
-    if state.hasTimedOut:
-        # an idle user's smoother evicts; a later return restarts the
-        # recurrence from its first new value (session-scoped EMA)
-        state.remove()
-        yield empty
-        return
-    if state.exists:
-        stored = state.get
-        ema, n = int(stored[0]), int(stored[1])
-        prev_last = int(stored[2]) if ttl_ms is not None else 0
-    else:
-        ema, n, prev_last = 0, 0, 0
-    whole = pd.concat(list(pdfs), ignore_index=True)
-    whole = whole.sort_values(["ts", "event_id"])
+def _ema_step(
+    key: tuple, rows: pd.DataFrame, prior: tuple | None
+) -> tuple[list[tuple], tuple]:
+    ema, n = (int(x) for x in prior) if prior is not None else (0, 0)
     # floor(value*1e6): same micro-unit convention as batch q213;
     # values are positive so truncated and floor division agree
-    v_micro = np.floor(whole["value"].to_numpy() * 1_000_000).astype("int64")
+    v_micro = np.floor(rows["value"].to_numpy() * 1_000_000).astype("int64")
     for v in v_micro:
         v = int(v)
         ema = v if n == 0 else (ema + v) // 2
         n += 1
-    if ttl_ms is None:
-        state.update((ema, n))
-    else:
-        last_ms = max(prev_last, int(whole["ts"].max().value // 1_000_000))
-        state.update((ema, n, last_ms))
-        state.setTimeoutTimestamp(last_ms + ttl_ms)
-    if n:
-        yield pd.DataFrame(
-            {"user_id": [int(key[0])], "n_events": [n], "ema_micro": [ema]}
-        ).astype("int64")
-    else:
-        yield empty
+    return ([(int(key[0]), n, ema)] if n else []), (ema, n)
 
 
 def ema_stream(
@@ -1349,26 +1121,20 @@ def ema_stream(
 
     ``state_ttl_ms``: an idle user's smoother evicts once the
     event-time watermark passes last event + TTL; a later return
-    restarts the EMA instead of blending across the idle gap.
+    restarts the EMA from its first new value instead of blending
+    across the idle gap (session-scoped EMA).
 
     `events` must be a streaming DataFrame with columns
     (user_id, event_id, ts, value).
     """
-
-    def fn(key, pdfs, state):
-        return _ema_group(key, pdfs, state, state_ttl_ms)
-
-    if state_ttl_ms is None:
-        src, schema, timeout = events, EMA_STATE_SCHEMA, GroupStateTimeout.NoTimeout
-    else:
-        src = events.withWatermark("ts", watermark_delay)
-        schema, timeout = EMA_STATE_TTL_SCHEMA, GroupStateTimeout.EventTimeTimeout
-    return src.groupBy("user_id").applyInPandasWithState(
-        fn,
-        outputStructType=EMA_OUTPUT_SCHEMA,
-        stateStructType=schema,
-        outputMode="append",
-        timeoutConf=timeout,
+    return keyed_state_stream(
+        events,
+        "user_id",
+        _ema_step,
+        EMA_OUTPUT_SCHEMA,
+        EMA_STATE_SCHEMA,
+        state_ttl_ms=state_ttl_ms,
+        watermark_delay=watermark_delay,
     )
 
 
@@ -1393,38 +1159,16 @@ BAL_STATE_SCHEMA = T.StructType(
         T.StructField("n_events", T.LongType()),
     ]
 )
-BAL_STATE_TTL_SCHEMA = T.StructType(
-    [*BAL_STATE_SCHEMA.fields, T.StructField("last_ms", T.LongType())]
-)
 
 _BAL_CREDIT_TYPES = ("view", "click")  # same credit rule as batch q222
 
 
-def _bal_group(
-    key: tuple,
-    pdfs: Iterable[pd.DataFrame],
-    state: GroupState,
-    ttl_ms: int | None = None,
-) -> Iterable[pd.DataFrame]:
-    empty = pd.DataFrame(
-        {"user_id": [], "n_events": [], "final_balance_cents": [], "n_resets": []}
-    ).astype("int64")
-    if state.hasTimedOut:
-        # an idle account's balance evicts; a post-gap return starts a
-        # fresh ledger (exposure-window semantics, like ema_stream)
-        state.remove()
-        yield empty
-        return
-    if state.exists:
-        stored = state.get
-        bal, resets, n = int(stored[0]), int(stored[1]), int(stored[2])
-        prev_last = int(stored[3]) if ttl_ms is not None else 0
-    else:
-        bal, resets, n, prev_last = 0, 0, 0, 0
-    whole = pd.concat(list(pdfs), ignore_index=True)
-    whole = whole.sort_values(["ts", "event_id"])
-    cents = np.floor(whole["value"].to_numpy() * 100).astype("int64")
-    credit = whole["event_type"].isin(_BAL_CREDIT_TYPES).to_numpy()
+def _bal_step(
+    key: tuple, rows: pd.DataFrame, prior: tuple | None
+) -> tuple[list[tuple], tuple]:
+    bal, resets, n = (int(x) for x in prior) if prior is not None else (0, 0, 0)
+    cents = np.floor(rows["value"].to_numpy() * 100).astype("int64")
+    credit = rows["event_type"].isin(_BAL_CREDIT_TYPES).to_numpy()
     for c, is_credit in zip(cents, credit):
         d = int(c) if is_credit else -int(c)
         nb = bal + d
@@ -1433,23 +1177,7 @@ def _bal_group(
             nb = 0
         bal = nb
         n += 1
-    if ttl_ms is None:
-        state.update((bal, resets, n))
-    else:
-        last_ms = max(prev_last, int(whole["ts"].max().value // 1_000_000))
-        state.update((bal, resets, n, last_ms))
-        state.setTimeoutTimestamp(last_ms + ttl_ms)
-    if n:
-        yield pd.DataFrame(
-            {
-                "user_id": [int(key[0])],
-                "n_events": [n],
-                "final_balance_cents": [bal],
-                "n_resets": [resets],
-            }
-        ).astype("int64")
-    else:
-        yield empty
+    return ([(int(key[0]), n, bal, resets)] if n else []), (bal, resets, n)
 
 
 def clamped_balance_stream(
@@ -1471,21 +1199,14 @@ def clamped_balance_stream(
     `events` must be a streaming DataFrame with columns
     (user_id, event_id, ts, event_type, value).
     """
-
-    def fn(key, pdfs, state):
-        return _bal_group(key, pdfs, state, state_ttl_ms)
-
-    if state_ttl_ms is None:
-        src, schema, timeout = events, BAL_STATE_SCHEMA, GroupStateTimeout.NoTimeout
-    else:
-        src = events.withWatermark("ts", watermark_delay)
-        schema, timeout = BAL_STATE_TTL_SCHEMA, GroupStateTimeout.EventTimeTimeout
-    return src.groupBy("user_id").applyInPandasWithState(
-        fn,
-        outputStructType=BAL_OUTPUT_SCHEMA,
-        stateStructType=schema,
-        outputMode="append",
-        timeoutConf=timeout,
+    return keyed_state_stream(
+        events,
+        "user_id",
+        _bal_step,
+        BAL_OUTPUT_SCHEMA,
+        BAL_STATE_SCHEMA,
+        state_ttl_ms=state_ttl_ms,
+        watermark_delay=watermark_delay,
     )
 
 
@@ -1509,9 +1230,6 @@ KMV_OUTPUT_SCHEMA = T.StructType(
 KMV_STATE_SCHEMA = T.StructType(
     [T.StructField("mins", T.ArrayType(T.LongType()))]
 )
-KMV_STATE_TTL_SCHEMA = T.StructType(
-    [*KMV_STATE_SCHEMA.fields, T.StructField("last_ms", T.LongType())]
-)
 
 
 def _kmv_hash_py(user_id: int) -> int:
@@ -1522,38 +1240,15 @@ def _kmv_hash_py(user_id: int) -> int:
     return int(hashlib.md5(str(int(user_id)).encode()).hexdigest()[:8], 16)
 
 
-def _kmv_group(
-    key: tuple,
-    pdfs: Iterable[pd.DataFrame],
-    state: GroupState,
-    ttl_ms: int | None = None,
-) -> Iterable[pd.DataFrame]:
-    empty = pd.DataFrame(
-        {"event_type": [], "n_in_sketch": [], "kth_hash": [], "est_distinct": []}
-    ).astype(
-        {
-            "event_type": "object",
-            "n_in_sketch": "int64",
-            "kth_hash": "int64",
-            "est_distinct": "int64",
-        }
-    )
-    if state.hasTimedOut:
-        state.remove()
-        yield empty
-        return
-    if state.exists:
-        stored = state.get
-        mins = list(stored[0])
-        prev_last = stored[1] if ttl_ms is not None else 0
-    else:
-        mins, prev_last = [], 0
+def _kmv_step(
+    key: tuple, rows: pd.DataFrame, prior: tuple | None
+) -> tuple[list[tuple], tuple]:
+    mins = list(prior[0]) if prior is not None else []
     before = tuple(mins)
-    whole = pd.concat(list(pdfs), ignore_index=True)
     # bottom-k of a set union is a SEMILATTICE: merge order cannot
     # matter, so batch parity is unconditional for any arrival order
     merged = set(mins)
-    merged.update(_kmv_hash_py(u) for u in whole["user_id"])
+    merged.update(_kmv_hash_py(u) for u in rows["user_id"])
     mins = sorted(merged)[:KMV_K]
     out: list[tuple] = []
     if tuple(mins) != before:
@@ -1565,17 +1260,7 @@ def _kmv_group(
             else n
         )
         out.append((key[0], n, kth if kth is not None else -1, est))
-    if ttl_ms is None:
-        state.update((mins,))
-    else:
-        last_ms = max(int(prev_last), int(whole["ts"].max().value // 1_000_000))
-        state.update((mins, last_ms))
-        state.setTimeoutTimestamp(last_ms + ttl_ms)
-    yield (
-        pd.DataFrame(out, columns=[f.name for f in KMV_OUTPUT_SCHEMA.fields])
-        if out
-        else empty
-    )
+    return out, (mins,)
 
 
 CM_ROWS = 4
@@ -1597,9 +1282,6 @@ CM_STATE_SCHEMA = T.StructType(
         T.StructField("n_events", T.LongType()),
     ]
 )
-CM_STATE_TTL_SCHEMA = T.StructType(
-    [*CM_STATE_SCHEMA.fields, T.StructField("last_ms", T.LongType())]
-)
 
 
 def _cm_coeffs() -> list[tuple[int, int]]:
@@ -1618,57 +1300,35 @@ def _cm_buckets(user_id: int) -> list[int]:
     return [(a * h + b) % MERSENNE_P % CM_WIDTH for a, b in _cm_coeffs()]
 
 
-def _cm_group(
+def _cm_step(
     key: tuple,
-    pdfs: Iterable[pd.DataFrame],
-    state: GroupState,
+    rows: pd.DataFrame,
+    prior: tuple | None,
     probe_users: tuple[int, ...],
-    ttl_ms: int | None = None,
-) -> Iterable[pd.DataFrame]:
-    empty = pd.DataFrame(
-        {"event_type": [], "probe_user": [], "est_c": []}
-    ).astype({"event_type": "object", "probe_user": "int64", "est_c": "int64"})
-    if state.hasTimedOut:
-        state.remove()
-        yield empty
-        return
-    if state.exists:
-        stored = state.get
-        cells = list(stored[0])
-        n_events = int(stored[1])
-        prev_last = stored[2] if ttl_ms is not None else 0
+) -> tuple[list[tuple], tuple]:
+    if prior is not None:
+        cells, n_events = list(prior[0]), int(prior[1])
     else:
-        cells, n_events, prev_last = [0] * (CM_ROWS * CM_WIDTH), 0, 0
+        cells, n_events = [0] * (CM_ROWS * CM_WIDTH), 0
 
     def estimate(user: int) -> int:
         bkts = _cm_buckets(user)
         return min(cells[r * CM_WIDTH + bkts[r]] for r in range(CM_ROWS))
 
     before = {u: estimate(u) for u in probe_users}
-    whole = pd.concat(list(pdfs), ignore_index=True)
     # counter addition is a commutative monoid: merge order cannot
     # matter, so batch parity is unconditional for any arrival order
     # (the same argument as KMV's bottom-k semilattice, on +)
-    for u in whole["user_id"]:
+    for u in rows["user_id"]:
         for r, bkt in enumerate(_cm_buckets(int(u))):
             cells[r * CM_WIDTH + bkt] += 1
-    n_events += len(whole)
+    n_events += len(rows)
     out = [
         (key[0], u, estimate(u))
         for u in probe_users
         if estimate(u) != before[u]
     ]
-    if ttl_ms is None:
-        state.update((cells, n_events))
-    else:
-        last_ms = max(int(prev_last), int(whole["ts"].max().value // 1_000_000))
-        state.update((cells, n_events, last_ms))
-        state.setTimeoutTimestamp(last_ms + ttl_ms)
-    yield (
-        pd.DataFrame(out, columns=[f.name for f in CM_OUTPUT_SCHEMA.fields])
-        if out
-        else empty
-    )
+    return out, (cells, n_events)
 
 
 def countmin_stream(
@@ -1706,21 +1366,15 @@ def countmin_stream(
     probes = tuple(int(u) for u in probe_users)
     if not probes:
         raise ValueError("countmin_stream requires at least one probe user")
-
-    def fn(key, pdfs, state):
-        return _cm_group(key, pdfs, state, probes, state_ttl_ms)
-
-    if state_ttl_ms is None:
-        src, schema, timeout = events, CM_STATE_SCHEMA, GroupStateTimeout.NoTimeout
-    else:
-        src = events.withWatermark("ts", watermark_delay)
-        schema, timeout = CM_STATE_TTL_SCHEMA, GroupStateTimeout.EventTimeTimeout
-    return src.groupBy("event_type").applyInPandasWithState(
-        fn,
-        outputStructType=CM_OUTPUT_SCHEMA,
-        stateStructType=schema,
-        outputMode="append",
-        timeoutConf=timeout,
+    return keyed_state_stream(
+        events,
+        "event_type",
+        partial(_cm_step, probe_users=probes),
+        CM_OUTPUT_SCHEMA,
+        CM_STATE_SCHEMA,
+        state_ttl_ms=state_ttl_ms,
+        watermark_delay=watermark_delay,
+        order=(),
     )
 
 
@@ -1740,9 +1394,6 @@ BLOOM_OUTPUT_SCHEMA = T.StructType(
 BLOOM_STATE_SCHEMA = T.StructType(
     [T.StructField("pos", T.ArrayType(T.LongType()))]
 )
-BLOOM_STATE_TTL_SCHEMA = T.StructType(
-    [*BLOOM_STATE_SCHEMA.fields, T.StructField("last_ms", T.LongType())]
-)
 
 
 def _bloom_positions(user_id: int) -> list[int]:
@@ -1755,38 +1406,22 @@ def _bloom_positions(user_id: int) -> list[int]:
     return [(a * h + b) % MERSENNE_P % BLOOM_M for a, b in hash_coeffs(BLOOM_K)]
 
 
-def _bloom_group(
+def _bloom_step(
     key: tuple,
-    pdfs: Iterable[pd.DataFrame],
-    state: GroupState,
+    rows: pd.DataFrame,
+    prior: tuple | None,
     probe_users: tuple[int, ...],
-    ttl_ms: int | None = None,
-) -> Iterable[pd.DataFrame]:
-    empty = pd.DataFrame(
-        {"event_type": [], "probe_user": [], "is_positive": []}
-    ).astype(
-        {"event_type": "object", "probe_user": "int64", "is_positive": "bool"}
-    )
-    if state.hasTimedOut:
-        state.remove()
-        yield empty
-        return
-    if state.exists:
-        stored = state.get
-        pos = set(stored[0])
-        prev_last = stored[1] if ttl_ms is not None else 0
-    else:
-        pos, prev_last = set(), 0
+) -> tuple[list[tuple], tuple]:
+    pos = set(prior[0]) if prior is not None else set()
 
     def positive(user: int) -> bool:
         return all(p in pos for p in _bloom_positions(user))
 
     before = {u: positive(u) for u in probe_users}
-    whole = pd.concat(list(pdfs), ignore_index=True)
     # set union is a semilattice: merge order cannot matter, so batch
     # parity is unconditional for any arrival order (KMV's argument
     # with union in place of bottom-k)
-    for u in whole["user_id"]:
+    for u in rows["user_id"]:
         pos.update(_bloom_positions(int(u)))
     # membership is MONOTONE (bits only get set), so the only change
     # a probe can report is negative -> positive
@@ -1795,17 +1430,7 @@ def _bloom_group(
         for u in probe_users
         if positive(u) and not before[u]
     ]
-    if ttl_ms is None:
-        state.update((sorted(pos),))
-    else:
-        last_ms = max(int(prev_last), int(whole["ts"].max().value // 1_000_000))
-        state.update((sorted(pos), last_ms))
-        state.setTimeoutTimestamp(last_ms + ttl_ms)
-    yield (
-        pd.DataFrame(out, columns=[f.name for f in BLOOM_OUTPUT_SCHEMA.fields])
-        if out
-        else empty
-    )
+    return out, (sorted(pos),)
 
 
 def bloom_filter_stream(
@@ -1847,28 +1472,15 @@ def bloom_filter_stream(
     probes = tuple(int(u) for u in probe_users)
     if not probes:
         raise ValueError("bloom_filter_stream requires at least one probe user")
-
-    def fn(key, pdfs, state):
-        return _bloom_group(key, pdfs, state, probes, state_ttl_ms)
-
-    if state_ttl_ms is None:
-        src, schema, timeout = (
-            events,
-            BLOOM_STATE_SCHEMA,
-            GroupStateTimeout.NoTimeout,
-        )
-    else:
-        src = events.withWatermark("ts", watermark_delay)
-        schema, timeout = (
-            BLOOM_STATE_TTL_SCHEMA,
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    return src.groupBy("event_type").applyInPandasWithState(
-        fn,
-        outputStructType=BLOOM_OUTPUT_SCHEMA,
-        stateStructType=schema,
-        outputMode="append",
-        timeoutConf=timeout,
+    return keyed_state_stream(
+        events,
+        "event_type",
+        partial(_bloom_step, probe_users=probes),
+        BLOOM_OUTPUT_SCHEMA,
+        BLOOM_STATE_SCHEMA,
+        state_ttl_ms=state_ttl_ms,
+        watermark_delay=watermark_delay,
+        order=(),
     )
 
 
@@ -1897,21 +1509,15 @@ def kmv_distinct_stream(
     `events` must be a streaming DataFrame with columns
     (user_id, event_id, ts, event_type).
     """
-
-    def fn(key, pdfs, state):
-        return _kmv_group(key, pdfs, state, state_ttl_ms)
-
-    if state_ttl_ms is None:
-        src, schema, timeout = events, KMV_STATE_SCHEMA, GroupStateTimeout.NoTimeout
-    else:
-        src = events.withWatermark("ts", watermark_delay)
-        schema, timeout = KMV_STATE_TTL_SCHEMA, GroupStateTimeout.EventTimeTimeout
-    return src.groupBy("event_type").applyInPandasWithState(
-        fn,
-        outputStructType=KMV_OUTPUT_SCHEMA,
-        stateStructType=schema,
-        outputMode="append",
-        timeoutConf=timeout,
+    return keyed_state_stream(
+        events,
+        "event_type",
+        _kmv_step,
+        KMV_OUTPUT_SCHEMA,
+        KMV_STATE_SCHEMA,
+        state_ttl_ms=state_ttl_ms,
+        watermark_delay=watermark_delay,
+        order=(),
     )
 
 
@@ -1945,9 +1551,6 @@ QSK_STATE_SCHEMA = T.StructType(
         T.StructField("n", T.LongType()),
     ]
 )
-QSK_STATE_TTL_SCHEMA = T.StructType(
-    [*QSK_STATE_SCHEMA.fields, T.StructField("last_ms", T.LongType())]
-)
 
 
 def _qsk_bucket_py(value: float) -> int:
@@ -1973,59 +1576,30 @@ def _qsk_estimate_py(cells: list[int], n: int, q_pct: int) -> int | None:
     return None  # unreachable while sum(cells) == n
 
 
-def _qsk_group(
+def _qsk_step(
     key: tuple,
-    pdfs: Iterable[pd.DataFrame],
-    state: GroupState,
+    rows: pd.DataFrame,
+    prior: tuple | None,
     probe_pcts: tuple[int, ...],
-    ttl_ms: int | None = None,
-) -> Iterable[pd.DataFrame]:
-    empty = pd.DataFrame(
-        {"event_type": [], "q_pct": [], "est": [], "n_obs": []}
-    ).astype(
-        {
-            "event_type": "object",
-            "q_pct": "int64",
-            "est": "int64",
-            "n_obs": "int64",
-        }
-    )
-    if state.hasTimedOut:
-        state.remove()
-        yield empty
-        return
-    if state.exists:
-        stored = state.get
-        cells = list(stored[0])
-        n = int(stored[1])
-        prev_last = stored[2] if ttl_ms is not None else 0
+) -> tuple[list[tuple], tuple]:
+    if prior is not None:
+        cells, n = list(prior[0]), int(prior[1])
     else:
-        cells, n, prev_last = [0] * QSK_NBKT, 0, 0
+        cells, n = [0] * QSK_NBKT, 0
 
     before = {q: _qsk_estimate_py(cells, n, q) for q in probe_pcts}
-    whole = pd.concat(list(pdfs), ignore_index=True)
     # histogram cell addition is a commutative monoid (q254's merge
     # law): merge order cannot matter, so batch parity is
     # unconditional for any arrival order — CountMin's argument on
     # the quantile sketch's cells
-    for v in whole["value"]:
+    for v in rows["value"]:
         cells[_qsk_bucket_py(float(v))] += 1
-    n += len(whole)
+    n += len(rows)
     after = {q: _qsk_estimate_py(cells, n, q) for q in probe_pcts}
     out = [
         (key[0], q, after[q], n) for q in probe_pcts if after[q] != before[q]
     ]
-    if ttl_ms is None:
-        state.update((cells, n))
-    else:
-        last_ms = max(int(prev_last), int(whole["ts"].max().value // 1_000_000))
-        state.update((cells, n, last_ms))
-        state.setTimeoutTimestamp(last_ms + ttl_ms)
-    yield (
-        pd.DataFrame(out, columns=[f.name for f in QSK_OUTPUT_SCHEMA.fields])
-        if out
-        else empty
-    )
+    return out, (cells, n)
 
 
 def quantile_stream(
@@ -2066,28 +1640,15 @@ def quantile_stream(
         raise ValueError("quantile_stream requires at least one probe percentile")
     if any(q < 1 or q > 100 for q in probes):
         raise ValueError("probe percentiles must be integers in 1..100")
-
-    def fn(key, pdfs, state):
-        return _qsk_group(key, pdfs, state, probes, state_ttl_ms)
-
-    if state_ttl_ms is None:
-        src, schema, timeout = (
-            events,
-            QSK_STATE_SCHEMA,
-            GroupStateTimeout.NoTimeout,
-        )
-    else:
-        src = events.withWatermark("ts", watermark_delay)
-        schema, timeout = (
-            QSK_STATE_TTL_SCHEMA,
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    return src.groupBy("event_type").applyInPandasWithState(
-        fn,
-        outputStructType=QSK_OUTPUT_SCHEMA,
-        stateStructType=schema,
-        outputMode="append",
-        timeoutConf=timeout,
+    return keyed_state_stream(
+        events,
+        "event_type",
+        partial(_qsk_step, probe_pcts=probes),
+        QSK_OUTPUT_SCHEMA,
+        QSK_STATE_SCHEMA,
+        state_ttl_ms=state_ttl_ms,
+        watermark_delay=watermark_delay,
+        order=(),
     )
 
 
@@ -2115,9 +1676,6 @@ RSV_STATE_SCHEMA = T.StructType(
         T.StructField("n", T.LongType()),
     ]
 )
-RSV_STATE_TTL_SCHEMA = T.StructType(
-    [*RSV_STATE_SCHEMA.fields, T.StructField("last_ms", T.LongType())]
-)
 
 
 def _rsv_hash_py(event_id: int) -> int:
@@ -2128,62 +1686,29 @@ def _rsv_hash_py(event_id: int) -> int:
     )
 
 
-def _rsv_group(
-    key: tuple,
-    pdfs: Iterable[pd.DataFrame],
-    state: GroupState,
-    k: int,
-    ttl_ms: int | None = None,
-) -> Iterable[pd.DataFrame]:
-    empty = pd.DataFrame(
-        {"event_type": [], "n_seen": [], "sample_ids": []}
-    ).astype(
-        {"event_type": "object", "n_seen": "int64", "sample_ids": "object"}
-    )
-    if state.hasTimedOut:
-        state.remove()
-        yield empty
-        return
-    if state.exists:
-        stored = state.get
-        members = list(zip(stored[0], stored[1]))
-        n = int(stored[2])
-        prev_last = stored[3] if ttl_ms is not None else 0
+def _rsv_step(
+    key: tuple, rows: pd.DataFrame, prior: tuple | None, k: int
+) -> tuple[list[tuple], tuple]:
+    if prior is not None:
+        members, n = list(zip(prior[0], prior[1])), int(prior[2])
     else:
-        members, n, prev_last = [], 0, 0
+        members, n = [], 0
 
     before = list(members)
-    whole = pd.concat(list(pdfs), ignore_index=True)
     # bottom-k of a union is the union's bottom-k (KMV's semilattice
     # on the sample members themselves): merge order cannot matter,
     # so the final sample equals the batch bottom-k for ANY arrival
     # permutation and batch split
-    for e in whole["event_id"]:
+    for e in rows["event_id"]:
         members.append((_rsv_hash_py(int(e)), int(e)))
     members = sorted(set(members))[:k]
-    n += len(whole)
+    n += len(rows)
+    out = []
     if members != before:
-        out = pd.DataFrame(
-            [
-                (
-                    key[0],
-                    n,
-                    ",".join(str(eid) for _, eid in members),
-                )
-            ],
-            columns=[f.name for f in RSV_OUTPUT_SCHEMA.fields],
-        )
-    else:
-        out = empty
+        out.append((key[0], n, ",".join(str(eid) for _, eid in members)))
     hv = [h for h, _ in members]
     ids = [eid for _, eid in members]
-    if ttl_ms is None:
-        state.update((hv, ids, n))
-    else:
-        last_ms = max(int(prev_last), int(whole["ts"].max().value // 1_000_000))
-        state.update((hv, ids, n, last_ms))
-        state.setTimeoutTimestamp(last_ms + ttl_ms)
-    yield out
+    return out, (hv, ids, n)
 
 
 def reservoir_stream(
@@ -2220,28 +1745,15 @@ def reservoir_stream(
     kk = int(k)
     if kk < 1:
         raise ValueError("reservoir_stream requires k >= 1")
-
-    def fn(key, pdfs, state):
-        return _rsv_group(key, pdfs, state, kk, state_ttl_ms)
-
-    if state_ttl_ms is None:
-        src, schema, timeout = (
-            events,
-            RSV_STATE_SCHEMA,
-            GroupStateTimeout.NoTimeout,
-        )
-    else:
-        src = events.withWatermark("ts", watermark_delay)
-        schema, timeout = (
-            RSV_STATE_TTL_SCHEMA,
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    return src.groupBy("event_type").applyInPandasWithState(
-        fn,
-        outputStructType=RSV_OUTPUT_SCHEMA,
-        stateStructType=schema,
-        outputMode="append",
-        timeoutConf=timeout,
+    return keyed_state_stream(
+        events,
+        "event_type",
+        partial(_rsv_step, k=kk),
+        RSV_OUTPUT_SCHEMA,
+        RSV_STATE_SCHEMA,
+        state_ttl_ms=state_ttl_ms,
+        watermark_delay=watermark_delay,
+        order=(),
     )
 
 
@@ -2268,9 +1780,6 @@ MG_STATE_SCHEMA = T.StructType(
         T.StructField("n_events", T.LongType()),
     ]
 )
-MG_STATE_TTL_SCHEMA = T.StructType(
-    [*MG_STATE_SCHEMA.fields, T.StructField("last_ms", T.LongType())]
-)
 
 
 def _mg_trim(counters: dict[int, int]) -> tuple[dict[int, int], int]:
@@ -2286,48 +1795,27 @@ def _mg_trim(counters: dict[int, int]) -> tuple[dict[int, int], int]:
     return trimmed, t
 
 
-def _mg_group(
-    key: tuple,
-    pdfs: Iterable[pd.DataFrame],
-    state: GroupState,
-    ttl_ms: int | None = None,
-) -> Iterable[pd.DataFrame]:
-    cols = [f.name for f in MG_OUTPUT_SCHEMA.fields]
-    empty = pd.DataFrame({c: [] for c in cols}).astype(
-        {
-            "event_type": "object",
-            "user_id": "int64",
-            "mg_count": "int64",
-            "offset": "int64",
-            "n_events": "int64",
-        }
-    )
-    if state.hasTimedOut:
-        state.remove()
-        yield empty
-        return
-    if state.exists:
-        stored = state.get
-        counters = dict(zip(stored[0], stored[1]))
-        offset = int(stored[2])
-        n_events = int(stored[3])
-        prev_last = stored[4] if ttl_ms is not None else 0
+def _mg_step(
+    key: tuple, rows: pd.DataFrame, prior: tuple | None
+) -> tuple[list[tuple], tuple]:
+    if prior is not None:
+        counters = dict(zip(prior[0], prior[1]))
+        offset, n_events = int(prior[2]), int(prior[3])
     else:
-        counters, offset, n_events, prev_last = {}, 0, 0, 0
+        counters, offset, n_events = {}, 0, 0
 
     before = dict(counters)
-    whole = pd.concat(list(pdfs), ignore_index=True)
     # batch-at-a-time like q146: the batch's EXACT value_counts (a
     # zero-offset summary) merges by counter addition, then one trim
     # restores the k-bound. Within a batch the result is order-free
     # (value_counts is exact); across batch splits MG is NOT
     # homomorphic — the contract is q276's bounded undercount
     # (undercount <= offset <= n/(k+1)), which holds for EVERY split.
-    for u, c in whole["user_id"].value_counts().items():
+    for u, c in rows["user_id"].value_counts().items():
         counters[int(u)] = counters.get(int(u), 0) + int(c)
     counters, t = _mg_trim(counters)
     offset += t
-    n_events += len(whole)
+    n_events += len(rows)
     changed = [
         (key[0], u, c, offset, n_events)
         for u, c in sorted(counters.items())
@@ -2338,16 +1826,8 @@ def _mg_group(
         for u in sorted(before)
         if u not in counters
     ]
-    out = changed + dropped
     users = sorted(counters)
-    cnts = [counters[u] for u in users]
-    if ttl_ms is None:
-        state.update((users, cnts, offset, n_events))
-    else:
-        last_ms = max(int(prev_last), int(whole["ts"].max().value // 1_000_000))
-        state.update((users, cnts, offset, n_events, last_ms))
-        state.setTimeoutTimestamp(last_ms + ttl_ms)
-    yield pd.DataFrame(out, columns=cols) if out else empty
+    return changed + dropped, (users, [counters[u] for u in users], offset, n_events)
 
 
 def mg_heavy_hitters_stream(
@@ -2380,25 +1860,15 @@ def mg_heavy_hitters_stream(
     `events` must be a streaming DataFrame with columns
     (user_id, event_id, ts, event_type).
     """
-
-    def fn(key, pdfs, state):
-        return _mg_group(key, pdfs, state, state_ttl_ms)
-
-    if state_ttl_ms is None:
-        src, schema, timeout = (
-            events,
-            MG_STATE_SCHEMA,
-            GroupStateTimeout.NoTimeout,
-        )
-    else:
-        src = events.withWatermark("ts", watermark_delay)
-        schema, timeout = MG_STATE_TTL_SCHEMA, GroupStateTimeout.EventTimeTimeout
-    return src.groupBy("event_type").applyInPandasWithState(
-        fn,
-        outputStructType=MG_OUTPUT_SCHEMA,
-        stateStructType=schema,
-        outputMode="append",
-        timeoutConf=timeout,
+    return keyed_state_stream(
+        events,
+        "event_type",
+        _mg_step,
+        MG_OUTPUT_SCHEMA,
+        MG_STATE_SCHEMA,
+        state_ttl_ms=state_ttl_ms,
+        watermark_delay=watermark_delay,
+        order=(),
     )
 
 
@@ -2425,62 +1895,20 @@ PACK_STATE_SCHEMA = T.StructType(
         T.StructField("n_docs", T.LongType()),
     ]
 )
-PACK_STATE_TTL_SCHEMA = T.StructType(
-    [*PACK_STATE_SCHEMA.fields, T.StructField("last_ms", T.LongType())]
-)
 
 
-def _pack_group(
-    key: tuple,
-    pdfs: Iterable[pd.DataFrame],
-    state: GroupState,
-    ttl_ms: int | None = None,
-) -> Iterable[pd.DataFrame]:
-    cols = ["bkt", "doc_id", "n_toks", "cum_in_before", "n_docs"]
-    empty = pd.DataFrame({c: [] for c in cols}).astype("int64")
-    if state.hasTimedOut:
-        # an idle bucket's running offset evicts; a post-gap return
-        # starts a fresh segment (exposure-window semantics)
-        state.remove()
-        yield empty
-        return
-    if state.exists:
-        stored = state.get
-        toks, n_docs = int(stored[0]), int(stored[1])
-        prev_last = int(stored[2]) if ttl_ms is not None else 0
-    else:
-        toks, n_docs, prev_last = 0, 0, 0
-    whole = pd.concat(list(pdfs), ignore_index=True)
-    # the batch training order within the bucket
-    whole = whole.sort_values(["ord_h", "doc_id"])
-    out_doc, out_toks, out_cum, out_nd = [], [], [], []
+def _pack_step(
+    key: tuple, rows: pd.DataFrame, prior: tuple | None
+) -> tuple[list[tuple], tuple]:
+    toks, n_docs = (int(x) for x in prior) if prior is not None else (0, 0)
+    out: list[tuple] = []
     for doc_id, n in zip(
-        whole["doc_id"].astype("int64"), whole["n_toks"].astype("int64")
+        rows["doc_id"].astype("int64"), rows["n_toks"].astype("int64")
     ):
-        out_doc.append(int(doc_id))
-        out_toks.append(int(n))
-        out_cum.append(toks)
-        toks += int(n)
         n_docs += 1
-        out_nd.append(n_docs)
-    if ttl_ms is None:
-        state.update((toks, n_docs))
-    else:
-        last_ms = max(prev_last, int(whole["ts"].max().value // 1_000_000))
-        state.update((toks, n_docs, last_ms))
-        state.setTimeoutTimestamp(last_ms + ttl_ms)
-    if out_doc:
-        yield pd.DataFrame(
-            {
-                "bkt": [int(key[0])] * len(out_doc),
-                "doc_id": out_doc,
-                "n_toks": out_toks,
-                "cum_in_before": out_cum,
-                "n_docs": out_nd,
-            }
-        ).astype("int64")
-    else:
-        yield empty
+        out.append((int(key[0]), int(doc_id), int(n), toks, n_docs))
+        toks += int(n)
+    return out, (toks, n_docs)
 
 
 def pack_offset_stream(
@@ -2505,8 +1933,9 @@ def pack_offset_stream(
     (ema/balance): on a log delivered in (ord_h, doc_id) order the
     latest per-doc rows equal the batch frame's (bkt, cum_in) exactly.
 
-    ``state_ttl_ms``: an idle bucket evicts once the watermark passes
-    last arrival + TTL; a later return starts a fresh packing segment.
+    ``state_ttl_ms``: an idle bucket's running offset evicts once the
+    watermark passes last arrival + TTL; a later return starts a
+    fresh packing segment.
 
     `docs` must be a streaming DataFrame with columns
     (doc_id, text) — plus `ts` when ``state_ttl_ms`` is set (the
@@ -2527,28 +1956,15 @@ def pack_offset_stream(
         ).alias("ord_h"),
     ).filter(F.col("n_toks") > 0)
     prepared = prepared.withColumn("bkt", F.expr(f"ord_h div {_PK_BKT_W}"))
-
-    def fn(key, pdfs, state):
-        return _pack_group(key, pdfs, state, state_ttl_ms)
-
-    if state_ttl_ms is None:
-        src, schema, timeout = (
-            prepared,
-            PACK_STATE_SCHEMA,
-            GroupStateTimeout.NoTimeout,
-        )
-    else:
-        src = prepared.withWatermark("ts", watermark_delay)
-        schema, timeout = (
-            PACK_STATE_TTL_SCHEMA,
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    return src.groupBy("bkt").applyInPandasWithState(
-        fn,
-        outputStructType=PACK_OUTPUT_SCHEMA,
-        stateStructType=schema,
-        outputMode="append",
-        timeoutConf=timeout,
+    return keyed_state_stream(
+        prepared,
+        "bkt",
+        _pack_step,
+        PACK_OUTPUT_SCHEMA,
+        PACK_STATE_SCHEMA,
+        state_ttl_ms=state_ttl_ms,
+        watermark_delay=watermark_delay,
+        order=("ord_h", "doc_id"),  # the batch training order in the bucket
     )
 
 
@@ -2576,61 +1992,33 @@ BATCH_STATE_SCHEMA = T.StructType(
         T.StructField("truncated_tokens", T.LongType()),
     ]
 )
-BATCH_STATE_TTL_SCHEMA = T.StructType(
-    [*BATCH_STATE_SCHEMA.fields, T.StructField("last_ms", T.LongType())]
-)
 
 
-def _bucket_batch_group(
-    key: tuple,
-    pdfs: Iterable[pd.DataFrame],
-    state: GroupState,
-    ttl_ms: int | None = None,
-) -> Iterable[pd.DataFrame]:
+def _bucket_batch_step(
+    key: tuple, rows: pd.DataFrame, prior: tuple | None
+) -> tuple[list[tuple], tuple]:
     from target_hdfs_spark.operators.packing import _LBB_CAP
 
-    cols = [f.name for f in BATCH_OUTPUT_SCHEMA.fields]
-    empty = pd.DataFrame({c: [] for c in cols}).astype("int64")
-    if state.hasTimedOut:
-        state.remove()
-        yield empty
-        return
-    if state.exists:
-        stored = state.get
-        n_docs, real, trunc = int(stored[0]), int(stored[1]), int(stored[2])
-        prev_last = stored[3] if ttl_ms is not None else 0
-    else:
-        n_docs, real, trunc, prev_last = 0, 0, 0, 0
-    whole = pd.concat(list(pdfs), ignore_index=True)
+    n_docs, real, trunc = (int(x) for x in prior) if prior is not None else (0, 0, 0)
     # (count, sum, sum) is a commutative monoid: parity with the batch
     # q286 row is unconditional for ANY arrival order and batch split
     # (countmin's argument with integer + throughout)
-    n_docs += len(whole)
-    real += int(whole["eff"].sum())
-    trunc += int((whole["n_toks"] - whole["eff"]).sum())
-    if ttl_ms is None:
-        state.update((n_docs, real, trunc))
-    else:
-        last_ms = max(int(prev_last), int(whole["ts"].max().value // 1_000_000))
-        state.update((n_docs, real, trunc, last_ms))
-        state.setTimeoutTimestamp(last_ms + ttl_ms)
+    n_docs += len(rows)
+    real += int(rows["eff"].sum())
+    trunc += int((rows["n_toks"] - rows["eff"]).sum())
     b = int(key[0])
     padded = n_docs * b
     cap = _LBB_CAP // b
-    yield pd.DataFrame(
-        [
-            (
-                b,
-                n_docs,
-                real,
-                padded,
-                (padded - real) * 1_000_000 // padded,
-                trunc,
-                (n_docs + cap - 1) // cap,
-            )
-        ],
-        columns=cols,
+    row = (
+        b,
+        n_docs,
+        real,
+        padded,
+        (padded - real) * 1_000_000 // padded,
+        trunc,
+        (n_docs + cap - 1) // cap,
     )
+    return [row], (n_docs, real, trunc)
 
 
 def bucket_batch_stream(
@@ -2675,28 +2063,15 @@ def bucket_batch_stream(
         .withColumn("eff", F.least(F.col("n_toks"), F.lit(_LBB_CAP)))
         .withColumn("bucket_len", F.expr(_bucket_case_sql("eff")))
     )
-
-    def fn(key, pdfs, state):
-        return _bucket_batch_group(key, pdfs, state, state_ttl_ms)
-
-    if state_ttl_ms is None:
-        src, schema, timeout = (
-            prepared,
-            BATCH_STATE_SCHEMA,
-            GroupStateTimeout.NoTimeout,
-        )
-    else:
-        src = prepared.withWatermark("ts", watermark_delay)
-        schema, timeout = (
-            BATCH_STATE_TTL_SCHEMA,
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    return src.groupBy("bucket_len").applyInPandasWithState(
-        fn,
-        outputStructType=BATCH_OUTPUT_SCHEMA,
-        stateStructType=schema,
-        outputMode="append",
-        timeoutConf=timeout,
+    return keyed_state_stream(
+        prepared,
+        "bucket_len",
+        _bucket_batch_step,
+        BATCH_OUTPUT_SCHEMA,
+        BATCH_STATE_SCHEMA,
+        state_ttl_ms=state_ttl_ms,
+        watermark_delay=watermark_delay,
+        order=(),
     )
 
 
@@ -2725,57 +2100,25 @@ PII_STATE_SCHEMA = T.StructType(
         T.StructField("residual", T.LongType()),
     ]
 )
-PII_STATE_TTL_SCHEMA = T.StructType(
-    [*PII_STATE_SCHEMA.fields, T.StructField("last_ms", T.LongType())]
-)
 
 
-def _pii_scan_group(
-    key: tuple,
-    pdfs: Iterable[pd.DataFrame],
-    state: GroupState,
-    ttl_ms: int | None = None,
-) -> Iterable[pd.DataFrame]:
-    cols = [f.name for f in PII_OUTPUT_SCHEMA.fields]
-    empty = pd.DataFrame({c: [] for c in cols})
-    if state.hasTimedOut:
-        state.remove()
-        yield empty
-        return
-    if state.exists:
-        stored = state.get
-        n_docs, n_hit, n_m, chars, resid = (int(v) for v in stored[:5])
-        prev_last = stored[5] if ttl_ms is not None else 0
+def _pii_scan_step(
+    key: tuple, rows: pd.DataFrame, prior: tuple | None
+) -> tuple[list[tuple], tuple]:
+    if prior is not None:
+        n_docs, n_hit, n_m, chars, resid = (int(v) for v in prior)
     else:
-        n_docs, n_hit, n_m, chars, resid, prev_last = 0, 0, 0, 0, 0, 0
-    whole = pd.concat(list(pdfs), ignore_index=True)
+        n_docs, n_hit, n_m, chars, resid = 0, 0, 0, 0, 0
     # every counter is an integer sum — a commutative monoid, so
     # parity with the batch q291 row is unconditional for ANY arrival
     # order and micro-batch split (the countmin/KMV argument)
-    n_docs += len(whole)
-    n_hit += int((whole["n_matches"] > 0).sum())
-    n_m += int(whole["n_matches"].sum())
-    chars += int(whole["match_chars"].sum())
-    resid += int(whole["residual"].sum())
-    if ttl_ms is None:
-        state.update((n_docs, n_hit, n_m, chars, resid))
-    else:
-        last_ms = max(int(prev_last), int(whole["ts"].max().value // 1_000_000))
-        state.update((n_docs, n_hit, n_m, chars, resid, last_ms))
-        state.setTimeoutTimestamp(last_ms + ttl_ms)
-    yield pd.DataFrame(
-        [
-            (
-                str(key[0]),
-                n_hit,
-                n_m,
-                chars,
-                n_hit * 1_000_000 // n_docs,
-                resid,
-            )
-        ],
-        columns=cols,
-    )
+    n_docs += len(rows)
+    n_hit += int((rows["n_matches"] > 0).sum())
+    n_m += int(rows["n_matches"].sum())
+    chars += int(rows["match_chars"].sum())
+    resid += int(rows["residual"].sum())
+    row = (str(key[0]), n_hit, n_m, chars, n_hit * 1_000_000 // n_docs, resid)
+    return [row], (n_docs, n_hit, n_m, chars, resid)
 
 
 def pii_scan_stream(
@@ -2808,29 +2151,15 @@ def pii_scan_stream(
     from target_hdfs_spark.operators.curation import pii_class_rows
 
     base_cols = ("ts",) if state_ttl_ms is not None else ()
-    prepared = pii_class_rows(docs, *base_cols)
-
-    def fn(key, pdfs, state):
-        return _pii_scan_group(key, pdfs, state, state_ttl_ms)
-
-    if state_ttl_ms is None:
-        src, schema, timeout = (
-            prepared,
-            PII_STATE_SCHEMA,
-            GroupStateTimeout.NoTimeout,
-        )
-    else:
-        src = prepared.withWatermark("ts", watermark_delay)
-        schema, timeout = (
-            PII_STATE_TTL_SCHEMA,
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    return src.groupBy("pii_class").applyInPandasWithState(
-        fn,
-        outputStructType=PII_OUTPUT_SCHEMA,
-        stateStructType=schema,
-        outputMode="append",
-        timeoutConf=timeout,
+    return keyed_state_stream(
+        pii_class_rows(docs, *base_cols),
+        "pii_class",
+        _pii_scan_step,
+        PII_OUTPUT_SCHEMA,
+        PII_STATE_SCHEMA,
+        state_ttl_ms=state_ttl_ms,
+        watermark_delay=watermark_delay,
+        order=(),
     )
 
 
@@ -2853,41 +2182,17 @@ DSIR_STATE_SCHEMA = T.StructType(
         T.StructField("cnt_t", T.LongType()),
     ]
 )
-DSIR_STATE_TTL_SCHEMA = T.StructType(
-    [*DSIR_STATE_SCHEMA.fields, T.StructField("last_ms", T.LongType())]
-)
 
 
-def _dsir_model_group(
-    key: tuple,
-    pdfs: Iterable[pd.DataFrame],
-    state: GroupState,
-    ttl_ms: int | None = None,
-) -> Iterable[pd.DataFrame]:
-    cols = [f.name for f in DSIR_OUTPUT_SCHEMA.fields]
-    empty = pd.DataFrame({c: [] for c in cols}).astype("int64")
-    if state.hasTimedOut:
-        state.remove()
-        yield empty
-        return
-    if state.exists:
-        stored = state.get
-        cnt_r, cnt_t = int(stored[0]), int(stored[1])
-        prev_last = stored[2] if ttl_ms is not None else 0
-    else:
-        cnt_r, cnt_t, prev_last = 0, 0, 0
-    whole = pd.concat(list(pdfs), ignore_index=True)
+def _dsir_model_step(
+    key: tuple, rows: pd.DataFrame, prior: tuple | None
+) -> tuple[list[tuple], tuple]:
+    cnt_r, cnt_t = (int(x) for x in prior) if prior is not None else (0, 0)
     # two integer sums — a commutative monoid: parity with the batch
     # model aggregation is unconditional for any arrival order
-    cnt_r += len(whole)
-    cnt_t += int(whole["is_tgt"].sum())
-    if ttl_ms is None:
-        state.update((cnt_r, cnt_t))
-    else:
-        last_ms = max(int(prev_last), int(whole["ts"].max().value // 1_000_000))
-        state.update((cnt_r, cnt_t, last_ms))
-        state.setTimeoutTimestamp(last_ms + ttl_ms)
-    yield pd.DataFrame([(int(key[0]), cnt_r, cnt_t)], columns=cols)
+    cnt_r += len(rows)
+    cnt_t += int(rows["is_tgt"].sum())
+    return [(int(key[0]), cnt_r, cnt_t)], (cnt_r, cnt_t)
 
 
 def dsir_model_stream(
@@ -2948,28 +2253,15 @@ def dsir_model_stream(
             (md5_hash32("gram") % _DSIR_B).alias("bucket"),
         )
     )
-
-    def fn(key, pdfs, state):
-        return _dsir_model_group(key, pdfs, state, state_ttl_ms)
-
-    if state_ttl_ms is None:
-        src, schema, timeout = (
-            prepared,
-            DSIR_STATE_SCHEMA,
-            GroupStateTimeout.NoTimeout,
-        )
-    else:
-        src = prepared.withWatermark("ts", watermark_delay)
-        schema, timeout = (
-            DSIR_STATE_TTL_SCHEMA,
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    return src.groupBy("bucket").applyInPandasWithState(
-        fn,
-        outputStructType=DSIR_OUTPUT_SCHEMA,
-        stateStructType=schema,
-        outputMode="append",
-        timeoutConf=timeout,
+    return keyed_state_stream(
+        prepared,
+        "bucket",
+        _dsir_model_step,
+        DSIR_OUTPUT_SCHEMA,
+        DSIR_STATE_SCHEMA,
+        state_ttl_ms=state_ttl_ms,
+        watermark_delay=watermark_delay,
+        order=(),
     )
 
 
@@ -3022,41 +2314,29 @@ def _kappa_ppm(n: int, ca: int, cb: int, nb: int) -> int:
     return (1_000_000 * num) // den
 
 
-def _agree_group(
-    key: tuple,
-    pdfs: Iterable[pd.DataFrame],
-    state: GroupState,
-) -> Iterable[pd.DataFrame]:
-    cols = [f.name for f in AGREE_OUTPUT_SCHEMA.fields]
-    if state.exists:
-        n, ca, cb, nb = (int(v) for v in state.get)
-    else:
-        n, ca, cb, nb = 0, 0, 0, 0
-    whole = pd.concat(list(pdfs), ignore_index=True)
+def _agree_step(
+    key: tuple, rows: pd.DataFrame, prior: tuple | None
+) -> tuple[list[tuple], tuple]:
+    n, ca, cb, nb = (int(v) for v in prior) if prior is not None else (0, 0, 0, 0)
     # four integer sums — a commutative monoid: parity with the batch
     # q295 row is unconditional for any arrival order and batch split
-    n += len(whole)
-    ca += int(whole["a"].sum())
-    cb += int(whole["b"].sum())
-    nb += int((whole["a"] * whole["b"]).sum())
-    state.update((n, ca, cb, nb))
+    n += len(rows)
+    ca += int(rows["a"].sum())
+    cb += int(rows["b"].sum())
+    nb += int((rows["a"] * rows["b"]).sum())
     fa, fb = str(key[0]).split("|", 1)
     nn = n - ca - cb + nb
-    yield pd.DataFrame(
-        [
-            (
-                fa,
-                fb,
-                nb,
-                ca - nb,
-                cb - nb,
-                nn,
-                (nb + nn) * 1_000_000 // n,
-                _kappa_ppm(n, ca, cb, nb),
-            )
-        ],
-        columns=cols,
+    row = (
+        fa,
+        fb,
+        nb,
+        ca - nb,
+        cb - nb,
+        nn,
+        (nb + nn) * 1_000_000 // n,
+        _kappa_ppm(n, ca, cb, nb),
     )
+    return [row], (n, ca, cb, nb)
 
 
 def filter_agreement_stream(docs: DataFrame) -> DataFrame:
@@ -3090,10 +2370,11 @@ def filter_agreement_stream(docs: DataFrame) -> DataFrame:
     prepared = flags.select(
         F.expr(f"stack(6, {stack_args}) AS (pair, a, b)")
     )
-    return prepared.groupBy("pair").applyInPandasWithState(
-        _agree_group,
-        outputStructType=AGREE_OUTPUT_SCHEMA,
-        stateStructType=AGREE_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_state_stream(
+        prepared,
+        "pair",
+        _agree_step,
+        AGREE_OUTPUT_SCHEMA,
+        AGREE_STATE_SCHEMA,
+        order=(),
     )

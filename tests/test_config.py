@@ -147,3 +147,27 @@ def test_config_env_specific_prefix_wins(monkeypatch):
     monkeypatch.setenv("TARGET_HDFS_SPARK_COMPRESSION_METHOD", "snappy")
     cfg = config_from_env(dotenv_path="/nonexistent/.env")
     assert cfg.compression == "snappy"
+
+
+def test_about_lists_every_setting_from_dict_reads():
+    """`--about` advertises the whole config surface: every key
+    TargetConfig.from_dict reads is in ABOUT["settings"]."""
+    from target_hdfs_spark.ingest import ABOUT
+
+    class Recording(dict):
+        def __init__(self, *args):
+            super().__init__(*args)
+            self.read = set()
+
+        def get(self, key, default=None):
+            self.read.add(key)
+            return super().get(key, default)
+
+        def __getitem__(self, key):
+            self.read.add(key)
+            return super().__getitem__(key)
+
+    raw = Recording({"hdfs_destination_path": "/d"})
+    TargetConfig.from_dict(raw)
+    assert "stream_maps" in raw.read
+    assert raw.read <= set(ABOUT["settings"]), raw.read - set(ABOUT["settings"])
